@@ -1,15 +1,12 @@
 """LLM-data-pipeline operators (SURVEY.md §2.J): dedup, similarity search,
 text analysis, multimodal columns, time-series similarity."""
 
-# Import order = registration order (see registry.load_all). Through
-# round 10 this order WAS the driver certification order and rotated
-# per round (r10: multimodal/dedup/similarity led; curation cannot
-# lead — its module-level `from llm.text import SQL_QUALITY`
-# (decorator-time oracle interpolation) registers all 37 text rungs
-# after curation's 15th). Round 11 moved certification rotation to the
-# explicit registry.CERT_PREFIX_R11 list applied by
-# __spark_entry__.queries(), so import order here no longer needs to
-# churn; it still groups families for the cache janitor's locality.
+# Import order = registration order (see registry.load_all). The
+# certification prefix is an explicit list (registry.rotation_order), so
+# this order only groups families for the cache janitor's locality.
+# curation cannot lead: its module-level `from llm.text import
+# SQL_QUALITY` (decorator-time oracle interpolation) registers all 37
+# text rungs after curation's 15th.
 from aws_lambda_stream_processing_spark.llm import (  # noqa: F401
     multimodal,
     dedup,

@@ -24,6 +24,7 @@ from aws_lambda_stream_processing_spark.registry import (
     track_cache,
     tracked_local_checkpoint,
 )
+from aws_lambda_stream_processing_spark.session import conf_scope, scratch_dir
 from aws_lambda_stream_processing_spark.tables import load_table
 
 JACCARD_TAU = 0.95
@@ -740,15 +741,9 @@ def q_llm_dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the builder — scope the shuffle width to the actual parallelism for
     # their many small stages (a driver session's 200 default costs ~3× in
     # task-scheduling overhead per round — measured 20 s vs 7 s at sf0.01).
-    saved_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(spark.sparkContext.defaultParallelism),
-    )
-    try:
+    width = str(spark.sparkContext.defaultParallelism)
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": width}):
         member, labels = _cc_labels(spark, docs)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_sp)
     # un-contract: every doc inherits its representative's component label
     w = Window.partitionBy("cluster_id")
     return (
@@ -2073,11 +2068,7 @@ def q_llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(0.6 * (F.max("doc_id") + 1)).cast("long").alias("c")
         ).collect()[0]["c"]
     )
-    idx_dir = None
-    try:
-        import tempfile
-
-        idx_dir = tempfile.mkdtemp(prefix="alsp_dedup_idx_")
+    with scratch_dir("alsp_dedup_idx_") as idx_dir:
         (
             d.where(F.col("doc_id") < cut)
             .select(F.sha2("text", 256).alias("h"))
@@ -2116,11 +2107,6 @@ def q_llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         return tracked_local_checkpoint(report)
-    finally:
-        if idx_dir:
-            import shutil as _sh
-
-            _sh.rmtree(idx_dir, ignore_errors=True)
 
 
 _BSH_M = 4096  # bloom bits

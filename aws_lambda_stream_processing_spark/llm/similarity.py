@@ -28,6 +28,7 @@ from aws_lambda_stream_processing_spark.registry import (
     track_cache,
     tracked_local_checkpoint,
 )
+from aws_lambda_stream_processing_spark.session import scratch_dir
 from aws_lambda_stream_processing_spark.tables import load_table, pin_width
 
 
@@ -2180,13 +2181,9 @@ def q_llm_ann_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted code table is bucketed by (j, code), and probes are
     partition-pruned point lookups + a candidate re-rank; embeddings
     never leave the vector store except for matched candidates."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     q, codes = _sign_code_index(emb)
-    base = tempfile.mkdtemp(prefix="alsp_ann_index_")
-    try:
+    with scratch_dir("alsp_ann_index_") as base:
         # offline: persist the index (codes partitioned by band j) and
         # the quantized vector store
         # cluster by band before the partitioned write (§6 small-files;
@@ -2238,8 +2235,6 @@ def q_llm_ann_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # 1/log2(rank+1) DCG discounts and their running sums as EXACT double

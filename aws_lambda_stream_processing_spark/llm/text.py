@@ -2846,10 +2846,11 @@ def q_llm_bigram_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: 'cumulative distinct' never materializes running sets —
     each bigram contributes at its FIRST document (min doc_id per
     bigram: one hash-agg on the bigram key), so the curve is an ordinary
-    cumulative sum of per-doc new-bigram counts. Bigrams come from the
-    posexplode+lag form q_llm_neardup_shingle measured fastest; the
-    per-doc series then runs rank + two cumulative sums through the
-    dprefix two-phase helpers (the doc-grain relation scales with the
+    cumulative sum of per-doc new-bigram counts. Bigrams come from an
+    in-array zip (transform over slice(tokens, 1, n-1) pairs each token
+    with its successor, no exchange); the per-doc series then runs rank
+    + both cumulative sums in ONE fused pass of the dprefix helper
+    two_phase_rank_cumsums (the doc-grain relation scales with the
     corpus — no partition-less window), and only rank-multiple-of-50
     checkpoint rows survive to the output."""
     from aws_lambda_stream_processing_spark.operators.dprefix import (

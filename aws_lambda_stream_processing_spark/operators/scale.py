@@ -17,34 +17,17 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_lambda_stream_processing_spark.registry import query
+from aws_lambda_stream_processing_spark.session import (
+    conf_scope,
+    scratch_dir,
+    session_dir,
+)
 from aws_lambda_stream_processing_spark.tables import load_table
-
-_SESSION_SINKS: set[str] = set()
-
-
-def _cleanup_sink_at_exit(path: str) -> None:
-    """Defer removal of a per-applicationId sink dir to interpreter exit.
-
-    The dirs (alsp_dpp_sink_*, alsp_corrupt_scan_*) must OUTLIVE their
-    query — plan gates and tests re-read the lazy frames built over
-    them — so a finally-block rmtree would break the gates. atexit is
-    the earliest safe point; without it repeated sessions accumulate
-    orphaned partitioned-parquet dirs under /tmp."""
-    if not _SESSION_SINKS:
-        import atexit
-
-        atexit.register(
-            lambda: [
-                shutil.rmtree(p, ignore_errors=True) for p in _SESSION_SINKS
-            ]
-        )
-    _SESSION_SINKS.add(path)
 
 
 @query(
@@ -65,17 +48,11 @@ def q_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     time — the scan's PartitionFilters handle event_type, no data file of
     any other partition is opened."""
     e = load_table(spark, sf_dir, "events")
-    # Fixed path + overwrite: the returned DataFrame must stay lazy (the
+    # session_dir + overwrite: the returned DataFrame must stay lazy (the
     # plan gate asserts PartitionFilters on it), so the sink dir can't be
-    # removed here — reusing one fixed dir bounds the leak to a single copy
-    # instead of one mkdtemp per run. Keyed by applicationId: two Spark
-    # PROCESSES sharing one literal path race on overwrite vs _temporary
-    # (observed: concurrent pytest + driver_sim sweep → TASK_WRITE_FAILED
-    # Mkdirs); per-app dirs keep runs isolated, still one dir per session.
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"alsp_part_sink_{spark.sparkContext.applicationId}",
-    )
+    # removed here — reusing one per-application dir bounds it to a single
+    # copy, reaped at exit.
+    out = session_dir(spark, "part_sink")
     (
         e.select(
             "event_id",
@@ -542,37 +519,6 @@ _AQE_SKEW_CONFS = {
 }
 
 
-class _conf_ctx:
-    """Set/restore session confs around an eager execution (the engine
-    must leave the driver's session exactly as it found it)."""
-
-    def __init__(self, spark: SparkSession, confs: dict[str, str]):
-        self.spark, self.confs = spark, confs
-
-    def __enter__(self):
-        # Exception-safe: if a conf.set fails partway, __exit__ would
-        # never run (the with-body is never entered), so roll back the
-        # already-applied confs here before re-raising.
-        self.saved = {}
-        try:
-            for k, v in self.confs.items():
-                try:
-                    self.saved[k] = self.spark.conf.get(k)
-                except Exception:  # noqa: BLE001 - unset conf
-                    self.saved[k] = None
-                self.spark.conf.set(k, v)
-        except BaseException:
-            self.__exit__()
-            raise
-
-    def __exit__(self, *exc):
-        for k, v in self.saved.items():
-            if v is None:
-                self.spark.conf.unset(k)
-            else:
-                self.spark.conf.set(k, v)
-
-
 def _skewed_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deliberately skewed join: ~85% of events collapse onto key 0
     (user_id % 20 < 17), the rest spread over 996 cold keys; the dim is
@@ -644,7 +590,7 @@ def q_join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of guesses. At 100 TB this is the default posture — AQE on,
     skew thresholds at defaults — and the manual ladder is the escape
     hatch."""
-    with _conf_ctx(spark, _AQE_SKEW_CONFS):
+    with conf_scope(spark, _AQE_SKEW_CONFS):
         df = _skewed_join_frame(spark, sf_dir)
         rows = df.collect()
     return spark.createDataFrame(rows, df.schema)
@@ -758,11 +704,7 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     isolation note) and the returned frame stays LAZY so the gate sees
     the pruned scan."""
     e = load_table(spark, sf_dir, "events")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"alsp_dpp_sink_{spark.sparkContext.applicationId}",
-    )
-    _cleanup_sink_at_exit(out)
+    out = session_dir(spark, "dpp_sink")
     (
         e.select(
             "event_id",
@@ -920,7 +862,7 @@ def q_scale_aqe_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     per query. Runs EAGERLY inside the restored conf context
     (q_join_skew_aqe discipline); exact integer result, identical to
     the static plan's."""
-    with _conf_ctx(spark, _AQE_COALESCE_CONFS):
+    with conf_scope(spark, _AQE_COALESCE_CONFS):
         per_user = (
             load_table(spark, sf_dir, "events")
             .groupBy("user_id")
@@ -1056,7 +998,7 @@ def q_scale_aqe_runtime_broadcast(
     filtered dim: the 10 MB runtime check is made against reality, not
     against a cardinality guess that degrades with every stacked
     filter."""
-    with _conf_ctx(spark, _AQE_RUNTIME_BHJ_CONFS):
+    with conf_scope(spark, _AQE_RUNTIME_BHJ_CONFS):
         df = _runtime_bhj_frame(spark, sf_dir)
         rows = df.collect()
     return spark.createDataFrame(rows, df.schema)
@@ -1190,7 +1132,7 @@ def q_scale_runtime_bloom_filter(
     pass extra rows INTO the exact join), pinned by the exact oracle,
     and the injection is plan-gated in both directions
     (tests/test_plans.py)."""
-    with _conf_ctx(spark, _RUNTIME_BLOOM_CONFS):
+    with conf_scope(spark, _RUNTIME_BLOOM_CONFS):
         df = _runtime_bloom_frame(spark, sf_dir)
         rows = df.collect()
     return spark.createDataFrame(rows, df.schema)
@@ -1235,39 +1177,38 @@ def q_scale_cbo_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     nightly ANALYZE on hot facts so Catalyst plans from yesterday's
     truth instead of rowcount guesses. Catalog object is per-run-unique
     and dropped in a finally block (idempotent under re-run)."""
-    out = tempfile.mkdtemp(prefix="alsp_cbo_")
     tbl = "alsp_cbo_orders"
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
-    o.write.mode("overwrite").parquet(out)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    try:
-        spark.sql(f"CREATE TABLE {tbl} USING PARQUET LOCATION '{out}'")
-        spark.sql(
-            f"ANALYZE TABLE {tbl} COMPUTE STATISTICS "
-            "FOR COLUMNS o_orderkey, o_custkey"
-        )
-        n_rows = None
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect():
-            if r["col_name"] == "Statistics":
-                # "N bytes, M rows"
-                n_rows = int(r["data_type"].split(",")[1].split()[0])
-        rows = []
-        for col in ("o_custkey", "o_orderkey"):
-            info = {
-                r["info_name"]: r["info_value"]
-                for r in spark.sql(
-                    f"DESCRIBE TABLE EXTENDED {tbl} {col}"
-                ).collect()
-            }
-            rows.append(
-                (col, int(info["min"]), int(info["max"]),
-                 int(info["num_nulls"]), n_rows)
-            )
-    finally:
+    with scratch_dir("alsp_cbo_") as out:
+        o.write.mode("overwrite").parquet(out)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(out, ignore_errors=True)
+        try:
+            spark.sql(f"CREATE TABLE {tbl} USING PARQUET LOCATION '{out}'")
+            spark.sql(
+                f"ANALYZE TABLE {tbl} COMPUTE STATISTICS "
+                "FOR COLUMNS o_orderkey, o_custkey"
+            )
+            n_rows = None
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect():
+                if r["col_name"] == "Statistics":
+                    # "N bytes, M rows"
+                    n_rows = int(r["data_type"].split(",")[1].split()[0])
+            rows = []
+            for col in ("o_custkey", "o_orderkey"):
+                info = {
+                    r["info_name"]: r["info_value"]
+                    for r in spark.sql(
+                        f"DESCRIBE TABLE EXTENDED {tbl} {col}"
+                    ).collect()
+                }
+                rows.append(
+                    (col, int(info["min"]), int(info["max"]),
+                     int(info["num_nulls"]), n_rows)
+                )
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     return spark.createDataFrame(
         rows,
         "col_name string, min_v bigint, max_v bigint, "
@@ -1313,23 +1254,22 @@ def q_scale_manifest_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_scale_zorder_layout) exists for multi-column predicates."""
     import pyarrow.parquet as papq
 
-    out = tempfile.mkdtemp(prefix="alsp_manifest_") + "/t"
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_quantity", "l_shipdate",
         F.year("l_shipdate").alias("ship_year"),
     )
-    # Spark's default parquet timestamp encoding is INT96, which carries
-    # NO min/max statistics — the manifest would see None and could never
-    # skip. TIMESTAMP_MICROS is the stats-bearing (and modern-reader)
-    # encoding; at 100 TB this conf is table-format policy, not a tweak.
-    with _conf_ctx(
-        spark,
-        {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"},
-    ):
-        li.repartition("ship_year").write.mode("overwrite").partitionBy(
-            "ship_year"
-        ).parquet(out)
-    try:
+    with scratch_dir("alsp_manifest_") as out:
+        # Spark's default parquet timestamp encoding is INT96, which carries
+        # NO min/max statistics — the manifest would see None and could never
+        # skip. TIMESTAMP_MICROS is the stats-bearing (and modern-reader)
+        # encoding; at 100 TB this conf is table-format policy, not a tweak.
+        with conf_scope(
+            spark,
+            {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"},
+        ):
+            li.repartition("ship_year").write.mode("overwrite").partitionBy(
+                "ship_year"
+            ).parquet(out)
         manifest = []  # (path, max_shipdate) — the skip-relevant stat
         for root, _dirs, files in os.walk(out):
             for fn in files:
@@ -1367,8 +1307,6 @@ def q_scale_manifest_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows = result.collect()
-    finally:
-        shutil.rmtree(os.path.dirname(out), ignore_errors=True)
     return spark.createDataFrame(rows, result.schema)
 
 

@@ -11,13 +11,16 @@ sinks, and Structured Streaming file replay for the shard itself.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_lambda_stream_processing_spark.registry import query, track_cache
+from aws_lambda_stream_processing_spark.session import (
+    conf_scope,
+    scratch_dir,
+    session_dir,
+)
 from aws_lambda_stream_processing_spark.tables import load_table
 
 # NOTE: streaming.replay is imported INSIDE the two stream-flavored ops,
@@ -90,18 +93,17 @@ def q_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate deterministic, so it carries an exact oracle (promoted from
     weak in round 2 — side-effecting ≠ non-deterministic). At scale the
     write is `partitionBy(date)` for pruning on downstream reads."""
-    out = tempfile.mkdtemp(prefix="alsp_sink_") + "/out"
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_shipdate"
     )
-    li.write.mode("overwrite").parquet(out)
-    back = spark.read.parquet(out)
-    result = back.agg(
-        F.count("*").alias("cnt"),
-        F.countDistinct("l_orderkey").alias("uniq_orders"),
-    )
-    rows = result.collect()
-    shutil.rmtree(out, ignore_errors=True)
+    with scratch_dir("alsp_sink_") as out:
+        li.write.mode("overwrite").parquet(out)
+        back = spark.read.parquet(out)
+        result = back.agg(
+            F.count("*").alias("cnt"),
+            F.countDistinct("l_orderkey").alias("uniq_orders"),
+        )
+        rows = result.collect()
     return spark.createDataFrame(rows, result.schema)
 
 
@@ -141,7 +143,6 @@ def q_stream_sink_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (idempotent re-runs overwrite the same path = exactly-once). The summed
     per-type counts across batches equal the batch counts exactly →
     exact oracle (promoted from weak in round 2)."""
-    sink_dir = tempfile.mkdtemp(prefix="alsp_fb_sink_")
 
     def handler(batch_df: DataFrame, batch_id: int) -> None:
         # overwrite keyed by batch_id → idempotent under at-least-once replay
@@ -157,12 +158,12 @@ def q_stream_sink_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_foreach_batch,
     )
 
-    run_foreach_batch(events_stream(spark, sf_dir), handler)
-    # partitioned-dataset read: `batch` becomes the partition column
-    back = spark.read.parquet(sink_dir)
-    result = back.groupBy("event_type").agg(F.sum("count").alias("cnt"))
-    rows = result.collect()
-    shutil.rmtree(sink_dir, ignore_errors=True)
+    with scratch_dir("alsp_fb_sink_") as sink_dir:
+        run_foreach_batch(events_stream(spark, sf_dir), handler)
+        # partitioned-dataset read: `batch` becomes the partition column
+        back = spark.read.parquet(sink_dir)
+        result = back.groupBy("event_type").agg(F.sum("count").alias("cnt"))
+        rows = result.collect()
     return spark.createDataFrame(rows, result.schema)
 
 
@@ -216,8 +217,7 @@ def q_sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is materialized so the sink dir can be removed (no tempdir
     leak per run — the q_sink_parquet pattern)."""
     e = load_table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="alsp_csv_")
-    try:
+    with scratch_dir("alsp_csv_") as out:
         proj = e.select(
             "event_type",
             F.round(F.col("value") * 100).cast("long").alias("cents"),
@@ -233,8 +233,6 @@ def q_sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -252,8 +250,7 @@ def q_sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     with an explicit schema, aggregate per user. Materialize + rmtree so
     the sink dir doesn't leak (q_sink_parquet pattern)."""
     e = load_table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="alsp_json_")
-    try:
+    with scratch_dir("alsp_json_") as out:
         e.select("user_id", "event_id").write.mode("overwrite").json(out)
         back = spark.read.schema("user_id BIGINT, event_id BIGINT").json(out)
         result = back.groupBy("user_id").agg(
@@ -263,8 +260,6 @@ def q_sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -288,8 +283,7 @@ def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents + min/max ts; the tiny final aggregate materializes so
     the sink dir can be removed (q_sink_parquet pattern)."""
     e = load_table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="alsp_orc_")
-    try:
+    with scratch_dir("alsp_orc_") as out:
         proj = e.select(
             "event_type",
             "ts",
@@ -305,8 +299,6 @@ def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -453,8 +445,7 @@ def q_source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the good/DLQ partition arithmetically and the exact cents total
     proves no clean record was lost or double-counted."""
     e = load_table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="alsp_dlq_")
-    try:
+    with scratch_dir("alsp_dlq_") as out:
         cents = F.round(F.col("value") * 100).cast("long")
         line = F.when(
             F.col("event_id") % 10 == 0, F.col("event_type")
@@ -492,8 +483,6 @@ def q_source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = result.collect()
         back.unpersist()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -518,8 +507,7 @@ def q_sink_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate materializes so the sink dir can be removed (q_sink_parquet
     pattern)."""
     o = load_table(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="alsp_xml_")
-    try:
+    with scratch_dir("alsp_xml_") as out:
         proj = o.select(
             "o_orderpriority",
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
@@ -536,8 +524,6 @@ def q_sink_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -565,8 +551,7 @@ def q_source_binary_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     (llm/multimodal.py). Tiny result materialized so the dir can be
     removed (the q_sink_parquet pattern)."""
     d = load_table(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="alsp_bin_")
-    try:
+    with scratch_dir("alsp_bin_") as out:
         docs = d.where(F.col("doc_id") < 20).select("doc_id", "text").collect()
         for r in docs:
             with open(
@@ -592,8 +577,6 @@ def q_source_binary_file(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -627,8 +610,7 @@ def q_scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_sink_parquet pattern). At scale, mergeSchema reads footers in
     parallel; pin the merged schema explicitly once it stabilizes."""
     o = load_table(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="alsp_evo_")
-    try:
+    with scratch_dir("alsp_evo_") as out:
         old_gen = o.where(F.col("o_orderkey") % 2 == 0).select(
             "o_orderpriority"
         )
@@ -656,8 +638,6 @@ def q_scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -691,8 +671,7 @@ def q_sink_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     proj = e.select(
         F.round(F.col("value") * 100).cast("long").alias("cents")
     )
-    out = tempfile.mkdtemp(prefix="alsp_codec_")
-    try:
+    with scratch_dir("alsp_codec_") as out:
         # The three codec writes are INDEPENDENT jobs over the same tiny
         # projection; run them from a thread pool so each write's task
         # tail back-fills the others' idle executors (guide §2.6 —
@@ -719,8 +698,6 @@ def q_sink_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
         result = frames[0].unionByName(frames[1]).unionByName(frames[2])
         rows = result.orderBy("codec").collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -758,8 +735,7 @@ def q_sink_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.round(F.col("value") * 100).cast("long").alias("cents")
     )
     k = proj.agg(F.min("user_id")).collect()[0][0] + 7  # bounded scalar
-    out = tempfile.mkdtemp(prefix="alsp_bloom_")
-    try:
+    with scratch_dir("alsp_bloom_") as out:
         variants = [
             ("bloom", {
                 "parquet.bloom.filter.enabled#user_id": "true",
@@ -795,8 +771,6 @@ def q_sink_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         result = frames[0].unionByName(frames[1])
         rows = result.orderBy("path").collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -820,8 +794,7 @@ def q_source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     text corpus actually lands before any schema exists. Materialize +
     rmtree (q_sink_parquet pattern)."""
     d = load_table(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="alsp_text_")
-    try:
+    with scratch_dir("alsp_text_") as out:
         d.select(
             F.concat_ws("\t", "lang", "text").alias("value")
         ).write.mode("overwrite").text(out)
@@ -839,8 +812,6 @@ def q_source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).orderBy("lang")
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -865,8 +836,7 @@ def q_source_csv_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe must survive exactly — any quoting/escaping asymmetry breaks
     the hash. Materialize + rmtree (q_sink_parquet pattern)."""
     d = load_table(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="alsp_csvd_")
-    try:
+    with scratch_dir("alsp_csvd_") as out:
         d.select("lang", "text").write.mode("overwrite").options(
             sep="|", quote='"', escape="\\", header=True
         ).csv(out)
@@ -886,8 +856,6 @@ def q_source_csv_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).orderBy("lang")
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -967,8 +935,7 @@ def q_sink_jsonl_gz_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plain-JSON round-trip's value fidelity. Exact integer
     aggregates."""
     d = load_table(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="alsp_jsonl_gz_")
-    try:
+    with scratch_dir("alsp_jsonl_gz_") as out:
         (
             d.select("doc_id", "source", "n_chars")
             .write.mode("overwrite")
@@ -985,8 +952,6 @@ def q_sink_jsonl_gz_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -1016,8 +981,7 @@ def q_source_csv_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     data in parquet at the edge; that contract is what this rung
     pins."""
     d = load_table(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="alsp_csv_ml_")
-    try:
+    with scratch_dir("alsp_csv_ml_") as out:
         (
             d.select(
                 "doc_id",
@@ -1060,8 +1024,6 @@ def q_source_csv_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -1092,12 +1054,8 @@ def q_scan_metadata_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     no join against a manifest; the group-by is the same one-exchange
     hash agg as any keyed count. At 100 TB this is how per-file audit
     counts (row counts per ingested object) are produced in one pass."""
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="alsp_meta_") + "/events"
     e = load_table(spark, sf_dir, "events")
-    try:
+    with scratch_dir("alsp_meta_") as out:
         (
             e.select("event_id", "user_id", "event_type")
             .repartition("event_type")
@@ -1132,8 +1090,6 @@ def q_scan_metadata_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -1161,23 +1117,14 @@ def q_scan_ignore_corrupt_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corrupt FILE, not losing or duplicating any good row. Without
     the conf the same scan throws — asserted as the negative control
     in tests, so the flag is proven load-bearing, not decorative."""
-    from aws_lambda_stream_processing_spark.operators.scale import (
-        _cleanup_sink_at_exit,
-        _conf_ctx,
-    )
-
     e = load_table(spark, sf_dir, "events")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"alsp_corrupt_scan_{spark.sparkContext.applicationId}",
-    )
-    _cleanup_sink_at_exit(out)
+    out = session_dir(spark, "corrupt_scan")
     e.select("event_id", "event_type", "value").write.mode(
         "overwrite"
     ).parquet(out)
     with open(os.path.join(out, "part-corrupt.parquet"), "wb") as fh:
         fh.write(b"PAR1 this is not a parquet file \x00\xff garbage")
-    with _conf_ctx(spark, {"spark.sql.files.ignoreCorruptFiles": "true"}):
+    with conf_scope(spark, {"spark.sql.files.ignoreCorruptFiles": "true"}):
         df = (
             spark.read.parquet(out)
             .groupBy("event_type")
@@ -1216,28 +1163,19 @@ def q_sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     other type still holds only the early window, exactly the oracle's
     disjunction. The reread is partition-pruned the same as
     q_sink_partitioned. The mode is conf-scoped and restored
-    (_conf_ctx): a backfill job sets it per write, not session-wide.
+    (conf_scope): a backfill job sets it per write, not session-wide.
     At 100 TB this is how a late-arriving day is re-landed without
     rewriting (or locking) the other 10,000 partitions."""
-    from aws_lambda_stream_processing_spark.operators.scale import (
-        _cleanup_sink_at_exit,
-        _conf_ctx,
-    )
-
     e = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
         "ts",
     )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"alsp_dynov_sink_{spark.sparkContext.applicationId}",
-    )
-    _cleanup_sink_at_exit(out)
+    out = session_dir(spark, "dynov_sink")
     early = e.where(F.col("ts") < "2024-01-21 00:00:00")
     backfill = e.where(F.col("event_type").isin("purchase", "click"))
-    with _conf_ctx(
+    with conf_scope(
         spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
     ):
         # static-mode first write is fine (it creates the layout);
@@ -1297,8 +1235,7 @@ def q_source_wholetext(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("body"),
         )
     )
-    out = tempfile.mkdtemp(prefix="alsp_wholetext_")
-    try:
+    with scratch_dir("alsp_wholetext_") as out:
         d.select(
             "doc_id",
             F.concat_ws("|", "lang", "n_chars", "body").alias("value"),
@@ -1321,8 +1258,6 @@ def q_source_wholetext(spark: SparkSession, sf_dir: str) -> DataFrame:
             fields.getItem(1).cast("long").alias("n_chars"),
         )
         return parsed.localCheckpoint()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @query(
@@ -1356,8 +1291,7 @@ def q_source_glob_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").where(
         F.col("event_type").isin("purchase", "click")
     )
-    base = tempfile.mkdtemp(prefix="alsp_glob_rec_")
-    try:
+    with scratch_dir("alsp_glob_rec_") as base:
         (
             e.where(F.col("event_type") == "purchase")
             .select("event_id", "event_type", "value")
@@ -1386,8 +1320,6 @@ def q_source_glob_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cents"),
         )
         return agg.localCheckpoint()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -1478,8 +1410,7 @@ def q_sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             return ManifestWriter(self.options)
 
     spark.dataSource.register(ManifestSink)
-    out = tempfile.mkdtemp(prefix="alsp_pyds_sink_")
-    try:
+    with scratch_dir("alsp_pyds_sink_") as out:
         # bounded to a 1-in-5 slice: the writer is row-at-a-time Python
         # by API design (6.9 s unbounded at sf0.1); the rung certifies
         # the COMMIT PROTOCOL, not bulk throughput — bulk sinks are the
@@ -1508,8 +1439,6 @@ def q_sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("event_id").cast("bigint").alias("max_id"),
         )
         rows = result.collect()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, result.schema)
 
 
@@ -1540,13 +1469,12 @@ def q_source_modified_after(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists, then reads only the new arrivals). The boundary is placed
     years from both mtimes so no session-timezone interpretation of
     the threshold string can flip a file across it. Materializes
-    under a finally-rmtree'd tempdir (the cache-table eager
-    discipline) — nothing leaks into /tmp. Production posture at
+    inside a scratch_dir (the cache-table eager discipline) — nothing
+    leaks. Production posture at
     scale: mtime filtering is the cheap first rung; the durable
     contract is the manifest/log (q_scale_manifest_pruning) once
     writers can rewrite history."""
-    tmp = tempfile.mkdtemp(prefix="alsp_modified_after_")
-    try:
+    with scratch_dir("alsp_modified_after_") as tmp:
         e = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", "value"
         )
@@ -1572,8 +1500,6 @@ def q_source_modified_after(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = result.collect()
         return spark.createDataFrame(rows, result.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(

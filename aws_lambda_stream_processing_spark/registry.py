@@ -164,38 +164,13 @@ def query(
 def load_all() -> dict[str, QuerySpec]:
     """Import every operator module so its @query decorators run.
 
-    Import order is registration order is the order a sequential driver
-    sweep certifies queries in — cheap batch families first, the
+    Import order is registration order: cheap batch families first, the
     streaming set (irreducible ~2 s/query of micro-batch machinery)
-    LAST, so a budget-truncated sweep certifies the maximum count.
-
-    The cheap-family order ROTATES between rounds: the driver's sweep
-    budget covers ~50 queries, so keeping one fixed prefix would leave
-    the rest of the registry driver-certified never (r5 verdict: the
-    r04 and r05 samples were the identical 50 IDs). Round 6 moved the
-    scalar-function (§2.H) and window (§2.E) families into the prefix
-    (43 first-time certifications). Round 7 moved `operators` ahead of
-    `functions` and rotated sqlfront + sketches + profiling to the head
-    of `operators` (50 first-time certifications). Round 8 moved the
-    never-certified `udf` package (§2.K) + modernsql + the profiling
-    tail to the front (~48 first-time IDs). Round 9 moved the `llm`
-    package first with `timeseries` (41 rungs, 41 never certified) and
-    `text` (36, 36 never) at its head (50 first-time IDs certified).
-    Round 10 rotates within `llm` (see llm/__init__.py): `curation`
-    (25 rungs, 25 never certified through r9), `multimodal` (7, 7
-    never) and `dedup` (21, 21 never) lead, so the first-50 prefix is
-    again 50 first-time IDs, all batch queries.
-    Round 11 switches the mechanism: after five import-order rotations
-    the never-certified pockets are module TAILS (a module's head
-    certifies the first time it leads, its tail never does), which
-    import permutation cannot reach without moving source. The prefix
-    is now the EXPLICIT list CERT_PREFIX_R11 below, applied by
-    __spark_entry__.queries() on top of this import order — surgical
-    selection of exactly 50 never-certified IDs, zero source churn.
-    Round 12 continues that mechanism with CERT_PREFIX_R12 (the next 50
-    never-certified IDs from the r01..r11 union).
-    Rotation only permutes dict insertion order; every query keeps its
-    ID, oracle, and behavior.
+    LAST, so a budget-truncated sequential sweep certifies the maximum
+    count. The certification prefix a sequential sweep reaches first is the
+    explicit CERT_PREFIX_R13 list, applied on top of this order by
+    rotation_order (__spark_entry__.queries()); it only permutes dict
+    insertion order — every query keeps its ID, oracle, and behavior.
     """
     import aws_lambda_stream_processing_spark.llm  # noqa: F401
     import aws_lambda_stream_processing_spark.operators  # noqa: F401
@@ -204,75 +179,6 @@ def load_all() -> dict[str, QuerySpec]:
     import aws_lambda_stream_processing_spark.streaming  # noqa: F401
 
     return REGISTRY
-
-
-# Round-11 driver-certification prefix (see load_all docstring): the 50
-# IDs a sequential driver sweep should reach FIRST this round. Chosen
-# from the 211 rungs never driver-certified through r10 (recomputed
-# union of CORRECTNESS_r01..r10), cheap batch rungs first per the r10
-# verdict: the operators/sources.py family (31 — the whole §2.A
-# source/sink surface has only full-sweep evidence so far), the
-# operators/profiling.py tail (15), and four singletons including the
-# two rungs this round touched (q_sample_seeded's seed-replay
-# certificate; q_str_mask_builtin). All 50 are first-time IDs; grouping
-# stays module-contiguous so family-scoped cache memos keep their
-# locality during the sweep.
-CERT_PREFIX_R11: tuple[str, ...] = (  # historical — see CERT_PREFIX_R12
-    "q_scan_parquet", "q_scan_pruned", "q_source_json_props",
-    "q_sink_parquet", "q_stream_source_replay",
-    "q_stream_sink_foreachbatch", "q_source_kinesis_envelope",
-    "q_sink_csv_roundtrip", "q_sink_json_roundtrip",
-    "q_sink_orc_roundtrip", "q_source_python_datasource",
-    "q_observe_metrics", "q_source_csv_malformed",
-    "q_sink_xml_roundtrip", "q_source_binary_file",
-    "q_scan_schema_evolution", "q_sink_parquet_codecs",
-    "q_sink_parquet_bloom", "q_source_text_lines",
-    "q_source_csv_dialect", "q_source_kpl_deaggregate",
-    "q_sink_jsonl_gz_roundtrip", "q_source_csv_multiline",
-    "q_scan_metadata_columns", "q_scan_ignore_corrupt_files",
-    "q_sink_dynamic_overwrite", "q_source_wholetext",
-    "q_source_glob_recursive", "q_sink_python_datasource",
-    "q_source_modified_after", "q_source_python_datasource_pushdown",
-    "q_agg_pchart", "q_agg_theil_decomp", "q_agg_corr_matrix",
-    "q_anon_generalization", "q_profile_psi_drift",
-    "q_profile_constraint_audit", "q_agg_fdr_bh",
-    "q_agg_hodges_lehmann", "q_agg_levene_bf", "q_agg_cramers_v",
-    "q_agg_mcnemar", "q_agg_anova2_unweighted",
-    "q_agg_tost_equivalence", "q_anon_microagg", "q_anon_suppression",
-    "q_set_union_by_name", "q_stat_crosstab", "q_sample_seeded",
-    "q_str_mask_builtin",
-)
-
-
-# Round-12 driver-certification prefix: the next 50 of the 161 rungs
-# never driver-certified through r11 (recomputed union of
-# CORRECTNESS_r01..r11 green rows+schema+hash entries — 376/537). All 50
-# are cheap batch rungs and module-contiguous in registration order (the
-# llm/similarity.py tail (4), the llm/curation.py tail (22), and the
-# llm/text.py tail (24) — exactly the "module tails certify never"
-# pockets the r11 verdict named), so family-scoped cache memos keep
-# their locality during the sweep. 111 rungs remain after this round
-# (operator tails + functions + the 27-rung streaming family); r13/r14
-# finish the job at the same cadence.
-CERT_PREFIX_R12: tuple[str, ...] = (  # historical — see CERT_PREFIX_R13
-    "q_llm_mmr_diversify", "q_llm_rag_context_pack", "q_llm_linear_probe",
-    "q_llm_embed_outliers", "q_llm_contamination", "q_llm_stratified_sample",
-    "q_llm_seq_pack", "q_llm_length_band_filter", "q_llm_contamination_matrix",
-    "q_llm_pii_scrub", "q_llm_weighted_sample", "q_llm_dataset_split",
-    "q_llm_code_detect", "q_llm_gopher_rules", "q_llm_domain_quota",
-    "q_llm_dsir_weights", "q_llm_token_budget_quota", "q_llm_reservoir_sample",
-    "q_llm_span_corruption", "q_llm_pipeline", "q_llm_cooccurrence",
-    "q_llm_bm25", "q_llm_keywords", "q_llm_repetition_ratio",
-    "q_llm_mixture_weights", "q_llm_unigram_xent", "q_llm_zipf_slope",
-    "q_llm_langid_confusion", "q_llm_inverted_index", "q_llm_bigram_lm",
-    "q_llm_corpus_summary", "q_llm_js_divergence", "q_llm_perplexity_band",
-    "q_llm_feature_hash", "q_llm_bpe_train", "q_llm_ngram_novelty",
-    "q_llm_tokenizer_fertility", "q_llm_entropy_rate", "q_llm_rare_token_docs",
-    "q_llm_winnowing", "q_llm_char_entropy", "q_llm_oov_rate",
-    "q_llm_dup_trigram_chars", "q_llm_bigram_pmi", "q_llm_bleu",
-    "q_llm_rouge_l", "q_llm_ctfidf", "q_llm_bigram_growth",
-    "q_llm_quality_calibration", "q_llm_shard_balance",
-)
 
 
 # Round-13 driver-certification prefix: the next 50 of the 111 rungs

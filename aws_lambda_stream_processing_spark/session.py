@@ -10,7 +10,12 @@ except the master URL.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+from collections.abc import Iterator
+from contextlib import contextmanager
+from tempfile import mkdtemp
 
 from pyspark.sql import SparkSession
 
@@ -111,3 +116,85 @@ def get_spark(app_name: str = "alsp-spark-engine") -> SparkSession:
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# ---------------------------------------------------------------------------
+# Side effects a query leaves behind. Every rung that overrides a session
+# conf or needs a directory goes through one of these, so each side effect
+# has exactly one owner and one cleanup rule.
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set `confs` for the body, then restore each one: its prior value,
+    or unset if it had none (the engine must leave the caller's session
+    exactly as it found it). Exception-safe: a set that fails partway
+    restores the confs already applied before re-raising."""
+    saved: dict[str, str | None] = {}
+    try:
+        for k, v in confs.items():
+            try:
+                saved[k] = spark.conf.get(k)
+            except Exception:  # noqa: BLE001 - unset conf
+                saved[k] = None
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def scratch(prefix: str) -> str:
+    """A fresh scratch dir; the caller owns its removal (prefer
+    scratch_dir). tmpfs when the host has it: state-store commits and
+    sink writes are many tiny files and fsync-bound on disk (measured
+    30-40% of streaming query time at sf0.1). On a real cluster this is
+    the RocksDB local dir + an object-store checkpoint."""
+    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    return mkdtemp(prefix=prefix, dir=base)
+
+
+@contextmanager
+def scratch_dir(prefix: str) -> Iterator[str]:
+    """A fresh scratch dir (see scratch), removed when the block exits.
+    A frame returned from inside the block must not read from the dir:
+    materialize it first (collect, or an eager tracked_local_checkpoint)."""
+    d = scratch(prefix)
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+# applicationId -> that application's root of session dirs
+_SESSION_ROOTS: dict[str, str] = {}
+
+
+def session_dir(spark: SparkSession, prefix: str) -> str:
+    """The dir `prefix` of this Spark application: the same path on every
+    call, for outputs that must outlive their query (plan gates re-read
+    the LAZY frames built over them) and for cross-query memos. One root
+    per applicationId keeps concurrent processes apart (two processes
+    sharing one path race on overwrite vs _temporary). A new application
+    reaps the previous one's root (its frames are dead with its
+    context); the last one is reaped at interpreter exit."""
+    app = spark.sparkContext.applicationId
+    root = _SESSION_ROOTS.get(app)
+    if root is None:
+        _reap_session_dirs()
+        root = _SESSION_ROOTS[app] = scratch(f"alsp_session_{app}_")
+    path = os.path.join(root, prefix)
+    os.makedirs(path, exist_ok=True)
+    return path
+
+
+def _reap_session_dirs() -> None:
+    for d in _SESSION_ROOTS.values():
+        shutil.rmtree(d, ignore_errors=True)
+    _SESSION_ROOTS.clear()
+
+
+atexit.register(_reap_session_dirs)

@@ -20,7 +20,6 @@ unbounded driver-side state.
 from __future__ import annotations
 
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,35 +29,22 @@ from aws_lambda_stream_processing_spark.registry import (
     query,
     tracked_local_checkpoint,
 )
+from aws_lambda_stream_processing_spark.session import conf_scope, scratch_dir
 from aws_lambda_stream_processing_spark.streaming.replay import (
-    _scratch,
-    _stream_shuffle_conf,
+    EVENTS_DDL,
+    drain,
     events_stream,
     py_state_width,
     run_foreach_batch,
     run_to_memory,
-    split_events_dir,
+    split_dir,
+    split_stream,
+    stream_confs,
 )
 from aws_lambda_stream_processing_spark.tables import load_table
 
 # Written by split_events_dir: ts is already µs TIMESTAMP in these files.
-SPLIT_DDL = (
-    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, "
-    "value DOUBLE, props STRING"
-)
-
-
-def _stream_split(
-    spark: SparkSession, sf_dir: str, predicates: list[str]
-) -> tuple[DataFrame, str]:
-    """Stream the events table as len(predicates) ordered micro-batches."""
-    d = split_events_dir(spark, sf_dir, predicates)
-    stream = (
-        spark.readStream.schema(SPLIT_DDL)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
-    return stream, d
+SPLIT_DDL = EVENTS_DDL
 
 
 @query(
@@ -217,18 +203,6 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit arithmetically (all boundaries have >1 h margin, so <= vs <
     strictness cannot flip any window).
     """
-    import tempfile
-
-    from aws_lambda_stream_processing_spark.streaming.replay import (
-        run_foreach_batch,
-    )
-
-    d = split_events_dir(spark, sf_dir, [_B0_PRED])
-    ckpt = _scratch("alsp_wm_ckpt_")
-    # Finalized windows land in a parquet sink keyed by batch_id (idempotent
-    # under replay), NOT a driver-side list — round-1 note: collect()-into-a-
-    # list in a handler is the anti-pattern even when output is bounded.
-    sink = _scratch("alsp_wm_sink_")
 
     def plan() -> DataFrame:
         stream = (
@@ -251,26 +225,28 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         # shared checkpoint keeps batch ids monotonic across both runs
         batch_df.write.mode("overwrite").parquet(f"{sink}/batch={batch_id}")
 
-    try:
+    # Finalized windows land in a parquet sink keyed by batch_id (idempotent
+    # under replay), NOT a list collected in the handler — that is the
+    # anti-pattern even when output is bounded.
+    with (
+        split_dir(spark, sf_dir, [_B0_PRED]) as d,
+        scratch_dir("alsp_wm_ckpt_") as ckpt,
+        scratch_dir("alsp_wm_sink_") as sink,
+    ):
         # run 1: days 1-14 minus day 2 → commits watermark ≈ Jan 14 - 1 h
         run_foreach_batch(plan(), handler, checkpoint=ckpt)
         # deliver the remaining days + the now-late day-2 stragglers
-        extra = split_events_dir(spark, sf_dir, [f"NOT ({_B0_PRED})"])
-        shutil.move(f"{extra}/batch_000.parquet", f"{d}/batch_001.parquet")
-        shutil.rmtree(extra, ignore_errors=True)
+        with split_dir(spark, sf_dir, [f"NOT ({_B0_PRED})"]) as extra:
+            shutil.move(f"{extra}/batch_000.parquet", f"{d}/batch_001.parquet")
         # run 2: restart from checkpoint — restored watermark drops day 2
         run_foreach_batch(plan(), handler, checkpoint=ckpt)
         result = spark.read.parquet(sink).select(
             F.col("window_start").cast("timestamp").alias("window_start"),
             F.col("cnt").cast("long").alias("cnt"),
         )
-        # eager localCheckpoint: outlives the finally-rmtree without a
+        # eager localCheckpoint: outlives the scratch-dir removal without a
         # driver roundtrip (the q_stream_scd2_foreachbatch r7 pattern)
         return tracked_local_checkpoint(result)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
 
 
 @query(
@@ -288,14 +264,11 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale path: dropDuplicatesWithinWatermark bounds the dedup state to the
     retry horizon instead of all-time."""
-    stream, d = _stream_split(spark, sf_dir, ["true", "true"])
-    try:
+    with split_stream(spark, sf_dir, ["true", "true"]) as stream:
         deduped = stream.dropDuplicates(["event_id"]).select(
             "event_id", "user_id", "event_type", "value"
         )
         return run_to_memory(deduped, output_mode="append")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -314,23 +287,20 @@ def q_stream_running_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user running aggregate state — the DynamoDB-counter pattern.
     Delivered as two micro-batches so the state genuinely carries across
     batch boundaries; complete mode emits the final counter values."""
-    stream, d = _stream_split(
+    with split_stream(
         spark,
         sf_dir,
         [
             "ts < TIMESTAMP '2024-01-15 00:00:00'",
             "ts >= TIMESTAMP '2024-01-15 00:00:00'",
         ],
-    )
-    try:
+    ) as stream:
         agg = stream.groupBy("user_id").agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
             F.max("value").alias("max_value"),
         )
         return run_to_memory(agg, output_mode="complete")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -430,8 +400,7 @@ def q_stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     results = []
     for mode in ("complete", "update"):
-        stream, d = _stream_split(spark, sf_dir, preds)
-        try:
+        with split_stream(spark, sf_dir, preds) as stream:
             agg = stream.groupBy("event_type").count()
             mem = run_to_memory(agg, output_mode=mode)
             # update mode appends each trigger's changed rows to the memory
@@ -442,8 +411,6 @@ def q_stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .withColumn("mode", F.lit(mode))
             )
             results.append(final)
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
     return results[0].unionByName(results[1])
 
 
@@ -512,15 +479,14 @@ def q_stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    stream, d = _stream_split(
+    with split_stream(
         spark,
         sf_dir,
         [
             "ts < TIMESTAMP '2024-01-15 00:00:00'",
             "ts >= TIMESTAMP '2024-01-15 00:00:00'",
         ],
-    )
-    try:
+    ) as stream:
         out = stream.groupBy("user_id").applyInPandasWithState(
             count_increases,
             outputStructType=(
@@ -539,8 +505,6 @@ def q_stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             output_mode="append",
             shuffle_partitions=py_state_width(spark),
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -582,8 +546,7 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuous timestamps (declared `<`; no corpus row sits on the
     boundary). At 100 TB state is bounded by the watermark horizon on both
     sides, exactly as the inner variant."""
-    stream, d = _stream_split(spark, sf_dir, ["true"])
-    try:
+    with split_stream(spark, sf_dir, ["true"]) as stream:
         clicks = (
             stream.where(F.col("event_type") == "click")
             .select(
@@ -611,8 +574,6 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = joined.select("click_id", "purchase_id", "user_id")
         return run_to_memory(out, output_mode="append")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -667,8 +628,7 @@ def q_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB state on each side is bounded by its own watermark
     horizon; the asymmetric eviction means the purchase side holds only
     30 min more than the delay, independent of click volume."""
-    stream, d = _stream_split(spark, sf_dir, ["true"])
-    try:
+    with split_stream(spark, sf_dir, ["true"]) as stream:
         clicks = (
             stream.where(F.col("event_type") == "click")
             .select(
@@ -700,8 +660,6 @@ def q_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("user_id", "p_user").alias("user_id"),
         )
         return run_to_memory(out, output_mode="append")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -734,15 +692,6 @@ def q_stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     versioned parquet keeps the container-visible semantics identical."""
     import os
 
-    stream, d = _stream_split(
-        spark,
-        sf_dir,
-        [
-            "ts < TIMESTAMP '2024-01-15 00:00:00'",
-            "ts >= TIMESTAMP '2024-01-15 00:00:00'",
-        ],
-    )
-    state_base = _scratch("alsp_upsert_state_")
     from pyspark.sql import Window
 
     w_latest = Window.partitionBy("user_id").orderBy(
@@ -766,7 +715,17 @@ def q_stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{state_base}/v{batch_id}"
         )
 
-    try:
+    with (
+        split_stream(
+            spark,
+            sf_dir,
+            [
+                "ts < TIMESTAMP '2024-01-15 00:00:00'",
+                "ts >= TIMESTAMP '2024-01-15 00:00:00'",
+            ],
+        ) as stream,
+        scratch_dir("alsp_upsert_state_") as state_base,
+    ):
         run_foreach_batch(stream, handler)
         versions = sorted(
             int(p[1:]) for p in os.listdir(state_base) if p.startswith("v")
@@ -777,12 +736,9 @@ def q_stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type").alias("last_type"),
             F.col("ts").alias("last_ts"),
         )
-        # eager localCheckpoint: outlives the finally-rmtree without a
+        # eager localCheckpoint: outlives the scratch-dir removal without a
         # driver roundtrip (the q_stream_scd2_foreachbatch r7 pattern)
         return tracked_local_checkpoint(result)
-    finally:
-        shutil.rmtree(state_base, ignore_errors=True)
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -804,37 +760,28 @@ def q_stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sink (day count), so BOTH the data path and the metrics path
     are checked in one query. Telemetry equals data exactly because
     availableNow replays a frozen file list — no racing appends."""
-    from aws_lambda_stream_processing_spark.streaming.replay import (
-        _scratch,
-        _stream_shuffle_conf,
-        events_stream,
-    )
-    import shutil as _sh
     import uuid as _uuid
 
     stream = events_stream(spark, sf_dir)
     agg = stream.groupBy(F.to_date("ts").alias("day")).count()
     name = "mem_" + _uuid.uuid4().hex[:12]
-    ckpt = _scratch("alsp_metrics_ckpt_")
-    with _stream_shuffle_conf(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+    with scratch_dir("alsp_metrics_ckpt_") as ckpt, conf_scope(
+        spark, stream_confs()
+    ):
         try:
-            # Telemetry must fail LOUDLY, never undercount (round-2
-            # advice): a timed-out drain or a saturated recentProgress
-            # ring buffer (bounded at numRecentProgressUpdates, default
-            # 100) would silently drop batches from the sum.
-            if not q.awaitTermination(120.0):
-                raise RuntimeError(
-                    "q_stream_progress_metrics: drain timed out; "
-                    "telemetry would undercount"
-                )
+            # Telemetry must fail LOUDLY, never undercount: a timed-out
+            # drain (drain raises TimeoutError) or a saturated
+            # recentProgress ring buffer (bounded at
+            # numRecentProgressUpdates, default 100) would silently
+            # drop batches from the sum.
+            q = drain(
+                agg.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("complete")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True),
+                120.0,
+            )
             progs = list(q.recentProgress)
             cap = int(
                 spark.conf.get(
@@ -850,10 +797,7 @@ def q_stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             total_rows = sum(p["numInputRows"] for p in progs)
             n_days = spark.table(name).count()
         finally:
-            if q.isActive:
-                q.stop()
             spark.catalog.dropTempView(name)
-            _sh.rmtree(ckpt, ignore_errors=True)
     return spark.createDataFrame(
         [(total_rows, n_days)], "total_input_rows long, n_days long"
     )
@@ -920,17 +864,6 @@ def q_stream_scd2_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merge math is unchanged."""
     import os
 
-    stream, d = _stream_split(
-        spark,
-        sf_dir,
-        [
-            "ts < TIMESTAMP '2024-01-11 00:00:00'",
-            "ts >= TIMESTAMP '2024-01-11 00:00:00' "
-            "AND ts < TIMESTAMP '2024-01-21 00:00:00'",
-            "ts >= TIMESTAMP '2024-01-21 00:00:00'",
-        ],
-    )
-    state_base = _scratch("alsp_scd2_state_")
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1089,7 +1022,19 @@ def q_stream_scd2_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         # coalesce(2)).
         merged.repartition(4).write.mode("overwrite").parquet(cur)
 
-    try:
+    with (
+        split_stream(
+            spark,
+            sf_dir,
+            [
+                "ts < TIMESTAMP '2024-01-11 00:00:00'",
+                "ts >= TIMESTAMP '2024-01-11 00:00:00' "
+                "AND ts < TIMESTAMP '2024-01-21 00:00:00'",
+                "ts >= TIMESTAMP '2024-01-21 00:00:00'",
+            ],
+        ) as stream,
+        scratch_dir("alsp_scd2_state_") as state_base,
+    ):
         run_foreach_batch(stream, handler)
         versions = sorted(
             int(p[1:]) for p in os.listdir(state_base) if p.startswith("v")
@@ -1106,16 +1051,13 @@ def q_stream_scd2_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("state")
         )
         # Eager localCheckpoint instead of collect + createDataFrame:
-        # the result must outlive the state dir's rmtree below, but a
+        # the result must outlive the state dir's removal below, but a
         # driver roundtrip of the full interval table (~80k rows at
         # sf0.1) costs ~0.9 s + a re-parallelize on the caller's
         # collect; block-manager materialization is ~0.2 s and the
         # caller reads the blocks directly (best-of-2 7.3 → 4.6 s with
         # the repartition(4) layout fix).
         return tracked_local_checkpoint(final)
-    finally:
-        shutil.rmtree(state_base, ignore_errors=True)
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # Per-source token budget for q_stream_llm_curation: sized so admission
@@ -1218,30 +1160,16 @@ def q_stream_llm_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aws_lambda_stream_processing_spark.operators.dprefix import (
         two_phase_cumsum,
     )
-    from aws_lambda_stream_processing_spark.streaming.replay import (
-        split_table_dir,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.agg(F.max("doc_id")).collect()[0][0] + 1
     c1, c2, ov = n_docs // 3, (2 * n_docs) // 3, max(1, n_docs // 10)
-    d = split_table_dir(
-        spark,
-        sf_dir,
-        "documents",
-        [
-            f"doc_id < {c1}",
-            # overlap: redeliver the last `ov` docs of batch 0
-            f"doc_id >= {c1 - ov} AND doc_id < {c2}",
-            f"doc_id >= {c2}",
-        ],
-    )
-    stream = (
-        spark.readStream.schema(DOCS_DDL)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
-    state_base = _scratch("alsp_curation_state_")
+    predicates = [
+        f"doc_id < {c1}",
+        # overlap: redeliver the last `ov` docs of batch 0
+        f"doc_id >= {c1 - ov} AND doc_id < {c2}",
+        f"doc_id >= {c2}",
+    ]
 
     def handler(batch_df: DataFrame, batch_id: int) -> None:
         ss = batch_df.sparkSession
@@ -1364,7 +1292,15 @@ def q_stream_llm_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             for fut in futures:
                 fut.result()
 
-    try:
+    with (
+        split_dir(spark, sf_dir, predicates, table="documents") as d,
+        scratch_dir("alsp_curation_state_") as state_base,
+    ):
+        stream = (
+            spark.readStream.schema(DOCS_DDL)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(d)
+        )
         run_foreach_batch(stream, handler)
         # Numeric version order (the SCD2 handler's discipline) — a
         # lexicographic sort reads v10 before v2 past 9 batches, which
@@ -1378,12 +1314,9 @@ def q_stream_llm_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ]
         final = spark.read.parquet(*out_deltas)
-        # eager localCheckpoint: outlives the finally-rmtree without a
+        # eager localCheckpoint: outlives the scratch-dir removal without a
         # driver roundtrip (the q_stream_scd2_foreachbatch r7 pattern)
         return tracked_local_checkpoint(final)
-    finally:
-        shutil.rmtree(state_base, ignore_errors=True)
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -1424,16 +1357,6 @@ def q_stream_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-style sink). At 100 TB both sinks are partitioned appends;
     validation is per-row codegen, routing adds zero shuffles — the
     only exchange is the final bounded audit agg."""
-    stream, d = _stream_split(
-        spark,
-        sf_dir,
-        [
-            "ts < TIMESTAMP '2024-01-15 00:00:00'",
-            "ts >= TIMESTAMP '2024-01-15 00:00:00'",
-        ],
-    )
-    sink_base = _scratch("alsp_dlq_sink_")
-
     reason = (
         F.when(F.col("event_type") == "error", F.lit("poison_record"))
         .when(
@@ -1466,7 +1389,17 @@ def q_stream_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
             for fut in [pool.submit(w) for w in writes]:
                 fut.result()
 
-    try:
+    with (
+        split_stream(
+            spark,
+            sf_dir,
+            [
+                "ts < TIMESTAMP '2024-01-15 00:00:00'",
+                "ts >= TIMESTAMP '2024-01-15 00:00:00'",
+            ],
+        ) as stream,
+        scratch_dir("alsp_dlq_sink_") as sink_base,
+    ):
         run_foreach_batch(stream, handler)
         main = spark.read.parquet(f"{sink_base}/main/b*")
         dlq = spark.read.parquet(f"{sink_base}/dlq/b*")
@@ -1479,12 +1412,9 @@ def q_stream_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("cents").alias("cents"),
             )
         )
-        # eager localCheckpoint: outlives the finally-rmtree without a
+        # eager localCheckpoint: outlives the scratch-dir removal without a
         # driver roundtrip (the q_stream_scd2_foreachbatch r7 pattern)
         return tracked_local_checkpoint(audit)
-    finally:
-        shutil.rmtree(sink_base, ignore_errors=True)
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -1532,26 +1462,23 @@ def q_stream_checkpoint_recovery(
         )
         return stream.groupBy("event_type").agg(*agg_cols)
 
-    d = split_events_dir(spark, sf_dir, ["user_id % 2 = 0"])
-    ckpt = _scratch("alsp_ckrec_ckpt_")
-    out = _scratch("alsp_ckrec_out_")
-
     def handler(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{out}/latest")
 
-    try:
+    with (
+        split_dir(spark, sf_dir, ["user_id % 2 = 0"]) as d,
+        scratch_dir("alsp_ckrec_ckpt_") as ckpt,
+        scratch_dir("alsp_ckrec_out_") as out,
+    ):
         # run 1: even half, then the query object is gone
         run_foreach_batch(
             plan(d), handler, output_mode="complete", checkpoint=ckpt
         )
         # redeploy: the odd half lands as new files
-        d2 = split_events_dir(spark, sf_dir, ["user_id % 2 = 1"])
-        try:
+        with split_dir(spark, sf_dir, ["user_id % 2 = 1"]) as d2:
             shutil.move(
                 f"{d2}/batch_000.parquet", f"{d}/batch_001_rest.parquet"
             )
-        finally:
-            shutil.rmtree(d2, ignore_errors=True)
         # run 2: NEW query, same checkpoint — state + offsets recovered
         run_foreach_batch(
             plan(d), handler, output_mode="complete", checkpoint=ckpt
@@ -1559,13 +1486,9 @@ def q_stream_checkpoint_recovery(
         final = spark.read.parquet(f"{out}/latest").select(
             "event_type", "n", "cents"
         )
-        # eager localCheckpoint: outlives the finally-rmtree without a
+        # eager localCheckpoint: outlives the scratch-dir removal without a
         # driver roundtrip (the q_stream_scd2_foreachbatch r7 pattern)
         return tracked_local_checkpoint(final)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -1590,9 +1513,10 @@ def q_stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     per state-store partition — the same layout the stream wrote) and
     never touches the source topic; at 100 TB of state this is the
     only way to look inside without a replay."""
-    src = _scratch("alsp_streader_src_")
-    ckpt = _scratch("alsp_streader_ckpt_")
-    try:
+    with (
+        scratch_dir("alsp_streader_src_") as src,
+        scratch_dir("alsp_streader_ckpt_") as ckpt,
+    ):
         load_table(spark, sf_dir, "events").select(
             "event_type", "value"
         ).write.mode("overwrite").parquet(src)
@@ -1600,29 +1524,21 @@ def q_stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type string, value double"
         ).parquet(src)
         agg = stream.groupBy("event_type").agg(F.count("*").alias("n"))
-        q = (
+        drain(
             agg.writeStream.format("noop")
             .outputMode("complete")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
+            120,
         )
-        try:
-            q.awaitTermination(120)
-        finally:
-            if q.isActive:
-                q.stop()
         state = spark.read.format("statestore").load(ckpt)
         result = state.select(
             F.col("key.event_type").alias("event_type"),
             F.col("value.count").alias("n"),
         )
-        # eager localCheckpoint: outlives the finally-rmtree without a
+        # eager localCheckpoint: outlives the scratch-dir removal without a
         # driver roundtrip (the q_stream_scd2_foreachbatch r7 pattern)
         return tracked_local_checkpoint(result)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @query(
@@ -1660,15 +1576,14 @@ def q_stream_chained_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is hours×types (first op) + days×types (second),
     both calendar-bounded; the 100 TB posture is the same two
     RocksDB-backed aggs with more shuffle partitions."""
-    stream, d = _stream_split(
+    with split_stream(
         spark,
         sf_dir,
         [
             "ts < TIMESTAMP '2024-01-15 00:00:00'",
             "ts >= TIMESTAMP '2024-01-15 00:00:00'",
         ],
-    )
-    try:
+    ) as stream:
         hourly = (
             stream.withWatermark("ts", "0 seconds")
             .groupBy(F.window("ts", "1 hour"), "event_type")
@@ -1688,8 +1603,6 @@ def q_stream_chained_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = run_to_memory(daily, output_mode="append")
         return out.orderBy("day", "event_type")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 _ROCKSDB_PROVIDER = (
@@ -1724,17 +1637,16 @@ def q_stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     and decodes RocksDB snapshot zips as transparently as HDFS
     .delta files (tests assert the .zip artifacts, so the conf is
     proven load-bearing). The provider conf is set/restored around
-    the run via _conf_ctx — the driver's session leaves untouched.
+    the run via conf_scope — the caller's session is left untouched.
     At 100 TB of keyed state RocksDB is the only posture that works:
     state spills to local SSD instead of executor heap, changelog
     checkpointing bounds per-batch upload to the delta, and the
     memory-bound HDFS provider becomes the thing you migrate OFF —
     this rung is that migration's correctness proof in miniature."""
-    from aws_lambda_stream_processing_spark.operators.scale import _conf_ctx
-
-    src = _scratch("alsp_rocks_src_")
-    ckpt = _scratch("alsp_rocks_ckpt_")
-    try:
+    with (
+        scratch_dir("alsp_rocks_src_") as src,
+        scratch_dir("alsp_rocks_ckpt_") as ckpt,
+    ):
         load_table(spark, sf_dir, "events").select(
             "user_id",
             F.round(F.col("value") * 100).cast("long").alias("cents"),
@@ -1745,37 +1657,29 @@ def q_stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = stream.groupBy("user_id").agg(
             F.count("*").alias("n"), F.sum("cents").alias("cents")
         )
-        with _conf_ctx(
+        with conf_scope(
             spark,
             {"spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER},
         ):
-            q = (
+            drain(
                 agg.writeStream.format("noop")
                 .outputMode("complete")
                 .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+                .trigger(availableNow=True),
+                120,
             )
-            try:
-                q.awaitTermination(120)
-            finally:
-                if q.isActive:
-                    q.stop()
             state = spark.read.format("statestore").load(ckpt)
             result = state.select(
                 F.col("key.user_id").alias("user_id"),
                 F.col("value.count").alias("n"),
                 F.col("value.sum").alias("cents"),
             )
-            # eager localCheckpoint INSIDE the conf ctx (the provider
+            # eager localCheckpoint INSIDE the conf scope (the provider
             # conf governs the statestore read): outlives the
-            # finally-rmtree without a driver roundtrip (the
+            # scratch-dir removal without a collect roundtrip (the
             # q_stream_scd2_foreachbatch r7 pattern)
             out = tracked_local_checkpoint(result)
         return out
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @query(
@@ -1802,23 +1706,20 @@ def q_stream_dedup_within_watermark(
     oracle). A shorter-than-horizon delay trades state for possible
     re-emission — that operating point is the operator's contract, not
     a bug, which is why the delay is sized to the horizon."""
-    stream, d = _stream_split(
+    with split_stream(
         spark,
         sf_dir,
         [
             "ts < TIMESTAMP '2024-01-20 00:00:00'",
             "ts >= TIMESTAMP '2024-01-10 00:00:00'",
         ],
-    )
-    try:
+    ) as stream:
         deduped = (
             stream.withWatermark("ts", "15 days")
             .dropDuplicatesWithinWatermark(["event_id"])
             .select("event_id", "user_id", "event_type", "value")
         )
         return run_to_memory(deduped, output_mode="append")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -1853,8 +1754,7 @@ def q_stream_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan where it fits (funnel reached-next-stage flags, fraud
     any-trigger alerts): one output row per left row, no pair
     explosion through a hot user."""
-    stream, d = _stream_split(spark, sf_dir, ["true"])
-    try:
+    with split_stream(spark, sf_dir, ["true"]) as stream:
         clicks = (
             stream.where(F.col("event_type") == "click")
             .select(
@@ -1880,8 +1780,6 @@ def q_stream_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left_semi",
         )
         return run_to_memory(joined, output_mode="append")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -1996,15 +1894,14 @@ def q_stream_state_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    stream, d = _stream_split(
+    with split_stream(
         spark,
         sf_dir,
         [
             "ts < TIMESTAMP '2024-01-15 00:00:00'",
             "ts >= TIMESTAMP '2024-01-15 00:00:00'",
         ],
-    )
-    try:
+    ) as stream:
         # Key panel bounded to a third of the users: the dominant cost
         # of applyInPandasWithState is per-KEY handler machinery (one
         # invocation per key per batch + one per silent key in the
@@ -2036,8 +1933,6 @@ def q_stream_state_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
             output_mode="append",
             shuffle_partitions=py_state_width(spark),
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -2078,8 +1973,6 @@ def q_stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     numPartitions size the per-core generator, no input I/O at all,
     and the generated rows flow through the same sink/agg plan the
     production stream uses."""
-    ckpt = _scratch("alsp_rate_ckpt_")
-    sink = _scratch("alsp_rate_sink_")
     src = (
         spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", 2000)
@@ -2088,20 +1981,20 @@ def q_stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("advanceMillisPerBatch", 3600000)
         .load()
     )
-    try:
+    with (
+        scratch_dir("alsp_rate_ckpt_") as ckpt,
+        scratch_dir("alsp_rate_sink_") as sink,
+    ):
         for run in range(3):
-            q = (
+            drain(
                 src.selectExpr("timestamp AS hour", "value")
                 .writeStream.format("parquet")
                 .option("path", sink)
                 .option("checkpointLocation", ckpt)
                 .outputMode("append")
-                .trigger(once=True)
-                .start()
+                .trigger(once=True),
+                120,
             )
-            q.awaitTermination(120)
-            if q.isActive:
-                q.stop()
         agg = (
             spark.read.parquet(sink)
             .groupBy("hour", (F.col("value") % 7).alias("bucket"))
@@ -2111,9 +2004,6 @@ def q_stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return tracked_local_checkpoint(agg)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
 
 
 @query(
@@ -2141,27 +2031,28 @@ def q_stream_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     the union is a stateless DAG merge — no shuffle until the ONE
     downstream agg, exactly as cheap at 100 TB as a single source
     with the same row count."""
-    sa, da = _stream_split(
-        spark,
-        sf_dir,
-        [
-            "event_type IN ('purchase', 'click') "
-            "AND ts < TIMESTAMP '2024-01-15 00:00:00'",
-            "event_type IN ('purchase', 'click') "
-            "AND ts >= TIMESTAMP '2024-01-15 00:00:00'",
-        ],
-    )
-    sb, db = _stream_split(
-        spark,
-        sf_dir,
-        [
-            "event_type NOT IN ('purchase', 'click') "
-            "AND ts < TIMESTAMP '2024-02-01 00:00:00'",
-            "event_type NOT IN ('purchase', 'click') "
-            "AND ts >= TIMESTAMP '2024-02-01 00:00:00'",
-        ],
-    )
-    try:
+    with (
+        split_stream(
+            spark,
+            sf_dir,
+            [
+                "event_type IN ('purchase', 'click') "
+                "AND ts < TIMESTAMP '2024-01-15 00:00:00'",
+                "event_type IN ('purchase', 'click') "
+                "AND ts >= TIMESTAMP '2024-01-15 00:00:00'",
+            ],
+        ) as sa,
+        split_stream(
+            spark,
+            sf_dir,
+            [
+                "event_type NOT IN ('purchase', 'click') "
+                "AND ts < TIMESTAMP '2024-02-01 00:00:00'",
+                "event_type NOT IN ('purchase', 'click') "
+                "AND ts >= TIMESTAMP '2024-02-01 00:00:00'",
+            ],
+        ) as sb,
+    ):
         agg = (
             sa.unionByName(sb)
             .groupBy("event_type")
@@ -2173,9 +2064,6 @@ def q_stream_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return run_to_memory(agg, output_mode="complete")
-    finally:
-        shutil.rmtree(da, ignore_errors=True)
-        shutil.rmtree(db, ignore_errors=True)
 
 
 @query(
@@ -2254,26 +2142,24 @@ def q_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             return FeedReader()
 
     spark.dataSource.register(FeedSource)
-    ckpt = _scratch("alsp_pysrc_ckpt_")
-    sink = _scratch("alsp_pysrc_sink_")
-    try:
+    with (
+        scratch_dir("alsp_pysrc_ckpt_") as ckpt,
+        scratch_dir("alsp_pysrc_sink_") as sink,
+    ):
         # 2 runs, not more: each restart pays the full Python-source
         # micro-batch machinery (~3.3 s); two runs are the minimum
         # that proves custom-offset persistence across a restart
         for _run in range(2):
-            q = (
+            drain(
                 spark.readStream.format("alsp_feed_sim")
                 .load()
                 .writeStream.format("parquet")
                 .option("path", sink)
                 .option("checkpointLocation", ckpt)
                 .outputMode("append")
-                .trigger(once=True)
-                .start()
+                .trigger(once=True),
+                120,
             )
-            q.awaitTermination(120)
-            if q.isActive:
-                q.stop()
         agg = (
             spark.read.parquet(sink)
             .groupBy("shard")
@@ -2283,9 +2169,6 @@ def q_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return tracked_local_checkpoint(agg)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
 
 
 class _PartitionFileWriter:
@@ -2351,25 +2234,21 @@ def q_stream_foreach_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the latency path (no per-batch DataFrame machinery); writers
     should buffer like this one does — per-row flushes to an external
     store are the classic 100 TB sink bottleneck."""
-    out_dir = _scratch("alsp_few_")
-    try:
+    with scratch_dir("alsp_few_") as out_dir:
         src = events_stream(spark, sf_dir).where(
             F.col("event_type") == "purchase"
         ).select(
             "event_id", "user_id",
             F.round(F.col("value") * 100).cast("bigint").alias("cents"),
         )
-        with _stream_shuffle_conf(spark):
-            q = (
+        with conf_scope(spark, stream_confs()):
+            drain(
                 src.writeStream.foreach(_PartitionFileWriter(out_dir))
                 .outputMode("append")
                 .trigger(availableNow=True)
-                .option("checkpointLocation", out_dir + "/ckpt")
-                .start()
+                .option("checkpointLocation", out_dir + "/ckpt"),
+                120,
             )
-            q.awaitTermination(120)
-            if q.isActive:
-                q.stop()
         back = spark.read.schema(
             "event_id BIGINT, user_id BIGINT, cents BIGINT"
         ).csv(out_dir, pathGlobFilter="*.csv")
@@ -2379,8 +2258,6 @@ def q_stream_foreach_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cents").cast("bigint").alias("cents"),
         )
         return tracked_local_checkpoint(agg)
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 @query(
@@ -2420,8 +2297,7 @@ def q_stream_stream_right_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rest of the family; at 100 TB right-vs-left is a free choice —
     the planner keys state identically and only null-extension side
     flips."""
-    stream, d = _stream_split(spark, sf_dir, ["true"])
-    try:
+    with split_stream(spark, sf_dir, ["true"]) as stream:
         clicks = (
             stream.where(F.col("event_type") == "click")
             .select(
@@ -2451,8 +2327,6 @@ def q_stream_stream_right_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "click_id", "purchase_id", F.col("p_user").alias("user_id")
         )
         return run_to_memory(out, output_mode="append")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -2490,8 +2364,7 @@ def q_stream_max_files_per_trigger(
     coalesced across the limit."""
     import os as _os
 
-    landing = tempfile.mkdtemp(prefix="alsp_mfpt_")
-    try:
+    with scratch_dir("alsp_mfpt_") as landing:
         order = ["click", "error", "purchase", "signup"]
         e = load_table(spark, sf_dir, "events").select(
             "event_id",
@@ -2537,8 +2410,6 @@ def q_stream_max_files_per_trigger(
             sorted(acc),
             "batch_id bigint, event_type string, n bigint, cents bigint",
         )
-    finally:
-        shutil.rmtree(landing, ignore_errors=True)
 
 
 @query(
@@ -2633,16 +2504,17 @@ def q_stream_sink_python_datasource(
             return EpochManifestWriter(self.options)
 
     spark.dataSource.register(EpochManifestSink)
-    stream, d = _stream_split(
-        spark,
-        sf_dir,
-        [
-            "ts < TIMESTAMP '2024-01-15 00:00:00'",
-            "ts >= TIMESTAMP '2024-01-15 00:00:00'",
-        ],
-    )
-    out = _scratch("alsp_pyds_stream_sink_")
-    try:
+    with (
+        split_stream(
+            spark,
+            sf_dir,
+            [
+                "ts < TIMESTAMP '2024-01-15 00:00:00'",
+                "ts >= TIMESTAMP '2024-01-15 00:00:00'",
+            ],
+        ) as stream,
+        scratch_dir("alsp_pyds_stream_sink_") as out,
+    ):
         src = (
             stream.where(F.col("event_type") == "signup")
             .select(
@@ -2652,23 +2524,16 @@ def q_stream_sink_python_datasource(
             )
             .coalesce(2)
         )
-        q = (
+        # drain fails fast on a timeout: a partial manifest set would
+        # surface only as a confusing oracle mismatch downstream
+        drain(
             src.writeStream.format("stream_manifest_sink")
             .option("path", out)
             .option("checkpointLocation", out + "/ckpt")
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
+            180,
         )
-        q.awaitTermination(180)
-        if q.isActive:
-            # Fail fast: a partial manifest set would surface only as a
-            # confusing oracle mismatch downstream (ADVICE r8).
-            q.stop()
-            raise RuntimeError(
-                "q_stream_sink_python_datasource: stream did not drain "
-                "within 180 s — refusing to read partial manifests"
-            )
         committed: list[str] = []
         for fn in sorted(_os.listdir(out)):
             if fn.startswith("_MANIFEST_b") and not fn.endswith(".tmp"):
@@ -2688,6 +2553,3 @@ def q_stream_sink_python_datasource(
             F.max("event_id").cast("bigint").alias("max_id"),
         )
         return tracked_local_checkpoint(agg)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(d, ignore_errors=True)

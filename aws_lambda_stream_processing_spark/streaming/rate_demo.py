@@ -16,17 +16,14 @@ options on a real deployment; everything downstream is unchanged.
 
 from __future__ import annotations
 
-import shutil
 import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aws_lambda_stream_processing_spark.streaming.replay import (
-    _scratch,
-    _stream_shuffle_conf,
-)
+from aws_lambda_stream_processing_spark.session import conf_scope, scratch_dir
+from aws_lambda_stream_processing_spark.streaming.replay import stream_confs
 
 EVENT_TYPES = ("click", "view", "purchase", "signup", "error")
 
@@ -80,8 +77,9 @@ def drain_micro_batches(
         if len(seen) >= n_batches:
             done.set()
 
-    ckpt = _scratch("alsp_rate_ckpt_")
-    with _stream_shuffle_conf(spark):
+    with scratch_dir("alsp_rate_ckpt_") as ckpt, conf_scope(
+        spark, stream_confs()
+    ):
         q = (
             transformed.writeStream.foreachBatch(handler)
             .outputMode("update")
@@ -93,5 +91,4 @@ def drain_micro_batches(
             done.wait(timeout_s)
         finally:
             q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
     return seen

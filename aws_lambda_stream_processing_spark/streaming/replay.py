@@ -6,19 +6,31 @@ source and materialize the result — the Lambda-handler execution model
 checkpointing, exactly like an event-source mapping draining a shard; the
 memory sink stands in for the DynamoDB/S3 sink and is swapped for
 parquet/Kafka sinks in production (`foreachBatch` for arbitrary ones).
+Every bounded drain in the package goes through `drain`: start, wait,
+stop, and a TimeoutError instead of a partially filled sink.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
-import tempfile
 import time
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from aws_lambda_stream_processing_spark.registry import track_cache
+from aws_lambda_stream_processing_spark.session import (
+    conf_scope,
+    scratch,
+    scratch_dir,
+    session_dir,
+)
 
 # Explicit schema: streaming file sources cannot infer (and at 100 TB you
 # pin schemas anyway). The 2026-08-13 testdata regen stores ts as NAIVE
@@ -39,15 +51,6 @@ EVENTS_DDL = (
 _STREAM_SHUFFLE_PARTITIONS = "4"
 
 
-def _scratch(prefix: str) -> str:
-    """Streaming scratch dir (checkpoints, split inputs): tmpfs when the
-    host has it — state-store commits are many tiny files and fsync-bound
-    on disk (measured 30-40% of streaming query time at sf0.1). On a real
-    cluster this is the RocksDB local dir + an object-store checkpoint."""
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
-
-
 def py_state_width(spark: SparkSession) -> str:
     """Shuffle width for PYTHON-stateful streams (applyInPandasWithState).
 
@@ -62,19 +65,11 @@ def py_state_width(spark: SparkSession) -> str:
     return str(max(4, min(spark.sparkContext.defaultParallelism, 16)))
 
 
-class _stream_shuffle_conf:
-    """Scoped shuffle-partition override for the duration of a stream run."""
-
-    def __init__(self, spark: SparkSession, width: str | None = None):
-        self._spark = spark
-        self._width = width or _STREAM_SHUFFLE_PARTITIONS
-
-    def __enter__(self) -> None:
-        self._saved = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._width)
-
-    def __exit__(self, *exc) -> None:
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._saved)
+def stream_confs(width: str | None = None) -> dict[str, str]:
+    """Session confs a bounded stream runs under (see conf_scope): the
+    state-store shuffle width, _STREAM_SHUFFLE_PARTITIONS unless the rung
+    asks for another (py_state_width)."""
+    return {"spark.sql.shuffle.partitions": width or _STREAM_SHUFFLE_PARTITIONS}
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,6 +81,28 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
+
+
+def drain(writer: DataStreamWriter, timeout_s: float = 120.0) -> StreamingQuery:
+    """Start a configured bounded-trigger writer (availableNow / once),
+    block until it drains, and return the terminated query (its
+    recentProgress stays readable).
+
+    The query never outlives the call: it is stopped if still active,
+    whatever happened. A drain that does not finish within `timeout_s`
+    raises TimeoutError instead of handing back a partially filled
+    sink; a failed micro-batch re-raises from awaitTermination."""
+    q = writer.start()
+    try:
+        done = q.awaitTermination(timeout_s)
+    finally:
+        if q.isActive:
+            q.stop()
+    if not done:
+        raise TimeoutError(
+            f"stream {q.name or q.id} did not drain within {timeout_s} s"
+        )
+    return q
 
 
 def run_to_memory(
@@ -104,27 +121,24 @@ def run_to_memory(
     contains only rows emitted by that run. `shuffle_partitions` overrides
     the default stream width (see py_state_width for the Python-stateful
     rungs' wider setting).
+
+    The sink's temp view is dropped by the cache janitor when the next
+    query builds (the tracked_local_checkpoint contract); the returned
+    frame is already analyzed against the sink, so it stays readable.
     """
     spark = transformed.sparkSession
     name = "mem_" + uuid.uuid4().hex[:12]
-    own_ckpt = checkpoint is None
-    ckpt = checkpoint or _scratch("alsp_ckpt_")
-    with _stream_shuffle_conf(spark, shuffle_partitions):
-        q = (
+    track_cache(lambda: spark.catalog.dropTempView(name))
+    own = nullcontext(checkpoint) if checkpoint else scratch_dir("alsp_ckpt_")
+    with own as ckpt, conf_scope(spark, stream_confs(shuffle_partitions)):
+        drain(
             transformed.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
+            timeout_s,
         )
-        try:
-            q.awaitTermination(timeout_s)
-        finally:
-            if q.isActive:
-                q.stop()
-            if own_ckpt:
-                shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 
@@ -140,23 +154,45 @@ def run_foreach_batch(
     replaces Kinesis checkpoint-after-success). Unlike the memory sink,
     foreachBatch supports checkpoint recovery — pass `checkpoint` to resume
     offsets/watermark/state across runs (caller owns its cleanup)."""
-    own_ckpt = checkpoint is None
-    ckpt = checkpoint or _scratch("alsp_ckpt_")
-    with _stream_shuffle_conf(transformed.sparkSession):
-        q = (
+    own = nullcontext(checkpoint) if checkpoint else scratch_dir("alsp_ckpt_")
+    with own as ckpt, conf_scope(transformed.sparkSession, stream_confs()):
+        drain(
             transformed.writeStream.foreachBatch(handler)
             .outputMode(output_mode)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
+            timeout_s,
         )
-        try:
-            q.awaitTermination(timeout_s)
-        finally:
-            if q.isActive:
-                q.stop()
-            if own_ckpt:
-                shutil.rmtree(ckpt, ignore_errors=True)
+
+
+@contextmanager
+def split_dir(
+    spark: SparkSession,
+    sf_dir: str,
+    predicates: list[str],
+    table: str = "events",
+) -> Iterator[str]:
+    """split_table_dir, removed when the block exits."""
+    d = split_table_dir(spark, sf_dir, table, predicates)
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+@contextmanager
+def split_stream(
+    spark: SparkSession, sf_dir: str, predicates: list[str]
+) -> Iterator[DataFrame]:
+    """Stream the events table as len(predicates) ordered micro-batches
+    (one file per predicate, maxFilesPerTrigger=1); the split files are
+    removed when the block exits."""
+    with split_dir(spark, sf_dir, predicates) as d:
+        yield (
+            spark.readStream.schema(EVENTS_DDL)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(d)
+        )
 
 
 def split_events_dir(
@@ -186,22 +222,19 @@ def split_table_dir(
     Returns the directory. Caller owns cleanup.
 
     The Spark write jobs run ONCE per (application, sf_dir, table,
-    predicates) into a memoized master dir; every call hands back a fresh
+    predicates) into a master session_dir; every call hands back a fresh
     tmpfs COPY of those files (~ms), so callers keep delete-ownership
     while a multi-query sweep pays the split cost once, not per streaming
     query.
     """
     from aws_lambda_stream_processing_spark.tables import load_table
 
-    key = (
-        spark.sparkContext.applicationId, sf_dir, table, tuple(predicates)
-    )
-    stale = [k for k in _SPLIT_MEMO if k[0] != key[0]]
-    for k in stale:
-        shutil.rmtree(_SPLIT_MEMO.pop(k), ignore_errors=True)
-    master = _SPLIT_MEMO.get(key)
-    if master is None or not os.path.isdir(master):
-        master = _scratch("alsp_stream_master_")
+    digest = hashlib.sha1(
+        repr((sf_dir, table, tuple(predicates))).encode()
+    ).hexdigest()[:16]
+    master = session_dir(spark, f"stream_master_{digest}")
+    names = [f"batch_{i:03d}.parquet" for i in range(len(predicates))]
+    if not all(os.path.isfile(os.path.join(master, n)) for n in names):
         events = load_table(spark, sf_dir, table)
         for i, pred in enumerate(predicates):
             part_dir = os.path.join(master, f"_stage_{i}")
@@ -213,35 +246,14 @@ def split_table_dir(
                 if f.endswith(".parquet") and not f.startswith("_")
             )
             shutil.move(
-                os.path.join(part_dir, src),
-                os.path.join(master, f"batch_{i:03d}.parquet"),
+                os.path.join(part_dir, src), os.path.join(master, names[i])
             )
             shutil.rmtree(part_dir, ignore_errors=True)
-        _SPLIT_MEMO[key] = master
-    out = _scratch("alsp_stream_in_")
+    out = scratch("alsp_stream_in_")
     now = time.time()
-    for i in range(len(predicates)):
-        name = f"batch_{i:03d}.parquet"
+    for i, name in enumerate(names):
         dst = os.path.join(out, name)
         shutil.copy(os.path.join(master, name), dst)
         # FileStreamSource orders by modification time (oldest first).
         os.utime(dst, (now + i * 10, now + i * 10))
     return out
-
-
-# (app_id, sf_dir, table, predicates) -> master split dir; see
-# split_table_dir. tmpfs outlives the process, so masters are reaped at
-# interpreter exit — the round-1 ADVICE tempdir-leak class, closed
-# preemptively.
-_SPLIT_MEMO: dict[tuple[str, str, str, tuple[str, ...]], str] = {}
-
-
-def _reap_split_masters() -> None:
-    for d in _SPLIT_MEMO.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _SPLIT_MEMO.clear()
-
-
-import atexit  # noqa: E402  (registration belongs next to the memo)
-
-atexit.register(_reap_split_masters)

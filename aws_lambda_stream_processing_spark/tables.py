@@ -118,23 +118,28 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame
 # Cache-spread sizing: one cached partition per ~2 MiB of on-disk parquet
 # (zstd-compressed parquet expands ~5-10x in memory, so this is ~10-20 MB
 # of in-memory columnar batch per task — enough work to amortize task
-# scheduling, small enough to keep map stages parallel). Parameterised so
-# a deployment can align it with its executor sizing; the CAP at
+# scheduling, small enough to keep map stages parallel). The CAP at
 # defaultParallelism is what matters at 100 TB (any real fact table blows
 # past the target and spreads to every core), the TARGET is what matters
 # at calibration scale (kilobyte fixtures stay at 1-2 partitions instead
 # of paying a full-width task wave per query).
 _SPREAD_TARGET_BYTES = 2 * 1024 * 1024
+# Floor 4: a width-1 cache serializes every per-row compute stage over
+# that table (measured: the 14 JSON/XML/edit-distance/shingle rungs over
+# the 0.6-2 MB events/documents fixtures summed 17.7 s at floor 1 vs
+# 9.2 s at floor 4, while a 16-query sub-second control sample was
+# unchanged, and an 8-core rerun showed width <= 8 costs the small
+# queries nothing). Still capped at the session's parallelism, so a
+# 2-core session gets width 2.
+_SPREAD_FLOOR = 4
 
 
 def _spread_width(spark: SparkSession, path: str) -> int:
-    """Partition count for a cached table: ceil(bytes / target), capped
-    at the session's parallelism, floored at 1."""
+    """Partition count for a cached table: ceil(bytes / target), raised
+    to _SPREAD_FLOOR, capped at the session's parallelism, floored at 1."""
     import math
     import os
 
-    env = os.environ.get("ALSP_CACHE_SPREAD_TARGET_BYTES")
-    target = int(env) if env else _SPREAD_TARGET_BYTES
     try:
         if os.path.isdir(path):
             nbytes = sum(
@@ -147,17 +152,9 @@ def _spread_width(spark: SparkSession, path: str) -> int:
             nbytes = os.path.getsize(path)
     except OSError:
         nbytes = 0
-    # Floor 4 (env-overridable): a width-1 cache serializes every
-    # per-row compute stage over that table (measured r13: the 14
-    # JSON/XML/edit-distance/shingle rungs over the 0.6-2 MB
-    # events/documents fixtures summed 17.7 s at floor 1 vs 9.2 s at
-    # floor 4, while a 16-query sub-second control sample was unchanged
-    # — and the r12 driver's own 8-core rerun showed width <= 8 costs
-    # the small queries nothing). Capped at the session's parallelism
-    # so a 2-core driver rerun still gets width 2.
     cap = spark.sparkContext.defaultParallelism
-    floor = int(os.environ.get("ALSP_CACHE_SPREAD_FLOOR", "4"))
-    return max(1, min(cap, max(floor, math.ceil(nbytes / max(1, target)))))
+    by_bytes = math.ceil(nbytes / _SPREAD_TARGET_BYTES)
+    return max(1, min(cap, max(_SPREAD_FLOOR, by_bytes)))
 
 
 def pin_width(df: DataFrame, *keys: str) -> DataFrame:

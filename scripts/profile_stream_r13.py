@@ -3,8 +3,8 @@
 engine's own StreamingQueryProgress (durationMs breakdown + state
 operator metrics) per micro-batch, plus wall time per rung.
 
-Wraps replay.run_to_memory / run_foreach_batch so every started query's
-recentProgress is recorded before the harness drops it.
+Wraps replay.drain so every drained query's recentProgress is recorded
+before the harness drops it.
 
 Usage: python scripts/profile_stream_r13.py q_name [q_name ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
@@ -56,69 +56,20 @@ def main() -> int:
                 }
             )
 
-    orig_mem, orig_feb = replay.run_to_memory, replay.run_foreach_batch
+    orig_drain = replay.drain
 
-    def run_to_memory(transformed, output_mode="append", timeout_s=120.0,
-                      checkpoint=None, shuffle_partitions=None):
-        spark = transformed.sparkSession
-        import uuid as _uuid
+    def drain(writer, timeout_s=120.0):
+        q = orig_drain(writer, timeout_s)
+        _capture(q)
+        return q
 
-        import shutil as _shutil
-        name = "mem_" + _uuid.uuid4().hex[:12]
-        own = checkpoint is None
-        ckpt = checkpoint or replay._scratch("alsp_ckpt_")
-        with replay._stream_shuffle_conf(spark, shuffle_partitions):
-            q = (
-                transformed.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination(timeout_s)
-            finally:
-                _capture(q)
-                if q.isActive:
-                    q.stop()
-                if own:
-                    _shutil.rmtree(ckpt, ignore_errors=True)
-        return spark.table(name)
-
-    def run_foreach_batch(transformed, handler, output_mode="append",
-                          timeout_s=120.0, checkpoint=None):
-        import shutil as _shutil
-        own = checkpoint is None
-        ckpt = checkpoint or replay._scratch("alsp_ckpt_")
-        with replay._stream_shuffle_conf(transformed.sparkSession):
-            q = (
-                transformed.writeStream.foreachBatch(handler)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination(timeout_s)
-            finally:
-                _capture(q)
-                if q.isActive:
-                    q.stop()
-                if own:
-                    _shutil.rmtree(ckpt, ignore_errors=True)
-
-    replay.run_to_memory = run_to_memory
-    replay.run_foreach_batch = run_foreach_batch
-    # re-point queries.py's imported names too
+    # every bounded drain goes through replay.drain; re-point queries.py's
+    # imported name too
     from aws_lambda_stream_processing_spark.streaming import (
         queries as squeries,
     )
-    for mod in (squeries,):
-        if hasattr(mod, "run_to_memory"):
-            mod.run_to_memory = run_to_memory
-        if hasattr(mod, "run_foreach_batch"):
-            mod.run_foreach_batch = run_foreach_batch
+
+    replay.drain = squeries.drain = drain
 
     registry = load_all()
     spark = get_spark("alsp-stream-profile-r13")

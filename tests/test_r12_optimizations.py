@@ -109,7 +109,7 @@ def test_partsupp_memo_is_shared_across_tpch_consumers(spark, registry):
     assert "InMemoryTableScan" in plan9, plan9[:1500]
 
 
-def test_cached_tables_are_width_spread(spark):
+def test_cached_tables_are_width_spread(spark, monkeypatch):
     """tables.load_table under the ALSP_CACHE_TABLES=1 (bench/driver)
     posture must spread the single-row-group fact parquet to a
     SIZE-DERIVED width — the r12 audit found every map stage of every
@@ -124,22 +124,30 @@ def test_cached_tables_are_width_spread(spark):
     unchanged), the byte term grows with the data, and a 100 TB table
     gets every core. Uses sf0.01
     so the memo entry cannot collide with this suite's uncached SF_DIR
-    frames."""
+    frames. The byte term is checked on a stub 16-core session, so it
+    is visible strictly between the floor and the cap on any host."""
+    import math
     import os
+    from types import SimpleNamespace
 
     from aws_lambda_stream_processing_spark import tables as T
 
     sf_dir = "/root/testdata/sf0.01"
-    had = os.environ.get("ALSP_CACHE_TABLES")
-    had_target = os.environ.get("ALSP_CACHE_SPREAD_TARGET_BYTES")
-    had_floor = os.environ.get("ALSP_CACHE_SPREAD_FLOOR")
-    os.environ["ALSP_CACHE_TABLES"] = "1"
+    events = f"{sf_dir}/events.parquet"
+    cap = spark.sparkContext.defaultParallelism
+    default_target = T._SPREAD_TARGET_BYTES
+    monkeypatch.setenv("ALSP_CACHE_TABLES", "1")
     # shrink the target so the 216 KB sf0.01 events fixture derives a
     # byte-term width ABOVE the floor that the assertion can see
-    os.environ["ALSP_CACHE_SPREAD_TARGET_BYTES"] = str(32 * 1024)
+    monkeypatch.setattr(T, "_SPREAD_TARGET_BYTES", 32 * 1024)
+    by_bytes = math.ceil(os.path.getsize(events) / (32 * 1024))
+    assert 4 < by_bytes < 16
+    wide = SimpleNamespace(
+        sparkContext=SimpleNamespace(defaultParallelism=16)
+    )
+    assert T._spread_width(wide, events) == by_bytes
     try:
-        expect = T._spread_width(spark, f"{sf_dir}/events.parquet")
-        assert 4 < expect < spark.sparkContext.defaultParallelism
+        expect = T._spread_width(spark, events)
         df = T.load_table(spark, sf_dir, "events")
         assert df.rdd.getNumPartitions() == expect
         # broadcast dims stay single-partition
@@ -147,29 +155,15 @@ def test_cached_tables_are_width_spread(spark):
         assert dim.rdd.getNumPartitions() == 1
         # the derivation caps at the session's parallelism for data that
         # outgrows it (the 100 TB posture)
-        os.environ["ALSP_CACHE_SPREAD_TARGET_BYTES"] = "1"
-        assert (
-            T._spread_width(spark, f"{sf_dir}/events.parquet")
-            == spark.sparkContext.defaultParallelism
-        )
+        monkeypatch.setattr(T, "_SPREAD_TARGET_BYTES", 1)
+        assert T._spread_width(spark, events) == cap
         # ... and small fact tables sit at the compute-parallelism floor
-        os.environ.pop("ALSP_CACHE_SPREAD_TARGET_BYTES")
-        assert T._spread_width(spark, f"{sf_dir}/customer.parquet") == 4
-        os.environ["ALSP_CACHE_SPREAD_FLOOR"] = "1"
-        assert T._spread_width(spark, f"{sf_dir}/customer.parquet") == 1
+        monkeypatch.setattr(T, "_SPREAD_TARGET_BYTES", default_target)
+        customer = f"{sf_dir}/customer.parquet"
+        assert T._spread_width(spark, customer) == min(4, cap)
+        monkeypatch.setattr(T, "_SPREAD_FLOOR", 1)
+        assert T._spread_width(spark, customer) == 1
     finally:
-        if had is None:
-            os.environ.pop("ALSP_CACHE_TABLES", None)
-        else:
-            os.environ["ALSP_CACHE_TABLES"] = had
-        if had_target is None:
-            os.environ.pop("ALSP_CACHE_SPREAD_TARGET_BYTES", None)
-        else:
-            os.environ["ALSP_CACHE_SPREAD_TARGET_BYTES"] = had_target
-        if had_floor is None:
-            os.environ.pop("ALSP_CACHE_SPREAD_FLOOR", None)
-        else:
-            os.environ["ALSP_CACHE_SPREAD_FLOOR"] = had_floor
         app = spark.sparkContext.applicationId
         for name in ("events", "nation"):
             frame = T._MEMO.pop((app, sf_dir, name), None)

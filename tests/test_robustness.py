@@ -289,10 +289,9 @@ def test_corrupt_file_fails_without_flag_and_conf_restored(spark, registry):
     the same scan THROW without ignoreCorruptFiles (the flag is
     load-bearing), the query must leave the session conf exactly as it
     found it, and the resilient read must lose no good rows."""
-    import os
-    import tempfile
-
     import pytest
+
+    from aws_lambda_stream_processing_spark.session import session_dir
 
     before = spark.conf.get("spark.sql.files.ignoreCorruptFiles", "false")
     df = registry["q_scan_ignore_corrupt_files"].fn(spark, SF_DIR)
@@ -302,10 +301,7 @@ def test_corrupt_file_fails_without_flag_and_conf_restored(spark, registry):
 
     assert total == load_table(spark, SF_DIR, "events").count()
 
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"alsp_corrupt_scan_{spark.sparkContext.applicationId}",
-    )
+    out = session_dir(spark, "corrupt_scan")
     with pytest.raises(Exception, match="(?i)parquet|corrupt|footer"):
         spark.read.parquet(out).groupBy().count().collect()
 
@@ -353,17 +349,16 @@ def test_rocksdb_provider_engages_and_conf_restored(spark):
     snapshot/changelog ZIPs where the default HDFS provider writes
     .delta files — assert the .zip artifacts under an identically
     configured mini-run's checkpoint, and that the provider conf is
-    restored afterwards (the _conf_ctx contract)."""
+    restored afterwards (the conf_scope contract)."""
     import glob
     import shutil
 
     from pyspark.sql import functions as F
 
-    from aws_lambda_stream_processing_spark.operators.scale import _conf_ctx
+    from aws_lambda_stream_processing_spark.session import conf_scope, scratch
     from aws_lambda_stream_processing_spark.streaming.queries import (
         _ROCKSDB_PROVIDER,
     )
-    from aws_lambda_stream_processing_spark.streaming.replay import _scratch
 
     key = "spark.sql.streaming.stateStore.providerClass"
     try:
@@ -371,15 +366,15 @@ def test_rocksdb_provider_engages_and_conf_restored(spark):
     except Exception:  # noqa: BLE001 - unset
         before = None
 
-    src = _scratch("alsp_rockstest_src_")
-    ckpt = _scratch("alsp_rockstest_ckpt_")
+    src = scratch("alsp_rockstest_src_")
+    ckpt = scratch("alsp_rockstest_ckpt_")
     try:
         spark.range(50).select(
             (F.col("id") % 5).alias("k"), F.col("id").alias("v")
         ).write.mode("overwrite").parquet(src)
         stream = spark.readStream.schema("k long, v long").parquet(src)
         agg = stream.groupBy("k").agg(F.sum("v").alias("s"))
-        with _conf_ctx(spark, {key: _ROCKSDB_PROVIDER}):
+        with conf_scope(spark, {key: _ROCKSDB_PROVIDER}):
             q = (
                 agg.writeStream.format("noop")
                 .outputMode("complete")

@@ -14,9 +14,9 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from aws_lambda_stream_processing_spark.session import scratch
 from aws_lambda_stream_processing_spark.streaming.queries import SPLIT_DDL
 from aws_lambda_stream_processing_spark.streaming.replay import (
-    _scratch,
     run_foreach_batch,
     split_events_dir,
 )
@@ -49,7 +49,7 @@ def test_restart_without_new_input_emits_nothing(spark, scratch_dirs):
     must not re-invoke the sink handler with data — committed micro-batches
     are never reprocessed (exactly-once across restarts)."""
     d = split_events_dir(spark, SF_DIR, ["true"])
-    ckpt = _scratch("alsp_restart_ckpt_")
+    ckpt = scratch("alsp_restart_ckpt_")
     scratch_dirs.extend([d, ckpt])
 
     batches: list[tuple[int, int]] = []
@@ -79,7 +79,7 @@ def test_dedup_state_survives_restart(spark, scratch_dirs):
     checkpoint) receives the SAME rows again as a new file — a Kinesis batch
     retry straddling a redeploy — and must suppress every one of them."""
     d = split_events_dir(spark, SF_DIR, ["true"])
-    ckpt = _scratch("alsp_dedup_ckpt_")
+    ckpt = scratch("alsp_dedup_ckpt_")
     scratch_dirs.extend([d, ckpt])
 
     emitted: list[int] = []
@@ -121,7 +121,7 @@ def test_stateful_agg_continues_across_restart(spark, scratch_dirs):
     mode emission must equal the whole-table aggregate, not run 2's slice."""
     half = "ts < TIMESTAMP '2024-01-15 00:00:00'"
     d = split_events_dir(spark, SF_DIR, [half])
-    ckpt = _scratch("alsp_cont_ckpt_")
+    ckpt = scratch("alsp_cont_ckpt_")
     scratch_dirs.extend([d, ckpt])
 
     snapshots: list = []
@@ -219,7 +219,7 @@ def test_full_outer_join_does_not_reemit_after_restart(spark, scratch_dirs):
     re-emit every match-less row a second time (duplicate nulls in the
     sink = the at-least-once bug the checkpoint exists to prevent)."""
     d = split_events_dir(spark, SF_DIR, ["true"])
-    ckpt = _scratch("alsp_foj_ckpt_")
+    ckpt = scratch("alsp_foj_ckpt_")
     scratch_dirs.extend([d, ckpt])
 
     def plan():
@@ -298,7 +298,7 @@ def test_python_stream_sink_restart_does_not_duplicate(spark, scratch_dirs):
         def __init__(self, path):
             self.path = path
 
-    out = _scratch("alsp_pyds_restart_")
+    out = scratch("alsp_pyds_restart_")
     scratch_dirs.append(out)
 
     class _W(DataSourceStreamWriter):
