@@ -50,7 +50,10 @@ def derived_parts(df: DataFrame, n_parts: int | None) -> int:
     """Range-shuffle width: the caller's explicit value, else
     max(DEFAULT_PARTS, est_bytes / target) capped at 4x the session's
     parallelism. Uses the optimizer's sizeInBytes ESTIMATE (no job);
-    grids/rollups stay at the floor, corpus-scaled inputs widen."""
+    grids/rollups stay at the floor, corpus-scaled inputs widen. An
+    input without stats (e.g. a createDataFrame relation) estimates at
+    spark.sql.defaultSizeInBytes (Long.MaxValue by default); that is no
+    size at all, so it gets DEFAULT_PARTS, not the cap."""
     if n_parts is not None:
         return n_parts
     try:
@@ -60,8 +63,15 @@ def derived_parts(df: DataFrame, n_parts: int | None) -> int:
             .stats()
             .sizeInBytes()
         )
+        unknown = int(
+            df.sparkSession._jsparkSession.sessionState()  # noqa: SLF001
+            .conf()
+            .defaultSizeInBytes()
+        )
     except Exception:  # noqa: BLE001 - estimate is best-effort
-        est = 0
+        return DEFAULT_PARTS
+    if est >= unknown:
+        return DEFAULT_PARTS
     cap = 4 * df.sparkSession.sparkContext.defaultParallelism
     return max(DEFAULT_PARTS, min(cap, -(-est // _PART_TARGET_BYTES)))
 

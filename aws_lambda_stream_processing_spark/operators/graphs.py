@@ -17,25 +17,17 @@ converges the same way (the quantization error is < N/SCALE per step).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_lambda_stream_processing_spark.registry import (
+    app_memo,
     query,
     release_local_checkpoint,
     track_cache,
     tracked_local_checkpoint,
 )
 from aws_lambda_stream_processing_spark.tables import load_table
-
-
-# (app_id, sf_dir) -> cached half-edge DataFrame. Four graph queries
-# (triangles, pagerank, degree_dist, bfs) each need the same ~1.2M-edge
-# relation; building it costs ~4 s at sf0.1, so a suite pays ~16 s
-# without this. Same eviction discipline as tables._MEMO.
-_EDGE_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
 def _part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,47 +39,22 @@ def _part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured 8.9 s vs 3.6 s for this form at sf0.1 (same 1.196M edges).
     The pair explosion is bounded by (lines per order choose 2), a small
     constant per order, and the distinct output by (part vocabulary)²,
-    not fact-table size. The relation is CACHED per (application,
-    sf_dir) — the four graph operators share one materialization. The
-    oracle keeps the self-join formulation — same relation, independent
-    derivation."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _EDGE_MEMO if k[0] != app]:
-        del _EDGE_MEMO[k]
-    key = (app, sf_dir)
-    if key in _EDGE_MEMO:
-        return _EDGE_MEMO[key]
-    # Cross-JVM persisted copy (r9 verdict item 4, same design as the
-    # quotient-BFS artifact) — OPT-IN ONLY since r12
-    # (ALSP_BFS_DISK_CACHE=1): the optimization-round contract requires
-    # every bench/oracle invocation to compute from the parquet inputs,
-    # with no persisted intermediates keyed on the test data surviving
-    # across runs, so the default is now to rebuild per JVM (the
-    # in-process memo below still amortizes the build across one
-    # suite's graph family — that is the q_graph_edges_build "build
-    # rung owns the cost" discipline, inside the run). When enabled:
-    # keyed by source-file identity (path+size+mtime) under the
-    # user-owned verified cache root (see the artifact-cache block
-    # below _BFS_MEMO) with its OWN version constant; written
-    # atomically via dir rename; read cost ≈ 0.5 s.
-    cache_dir = None
-    if os.environ.get("ALSP_BFS_DISK_CACHE", "0") == "1":
-        cache_dir = _edges_cache_path(sf_dir)
-    edges = None
-    if (
-        cache_dir is not None
-        and os.path.isdir(cache_dir)
-        and _owned_by_us(cache_dir)
-    ):
-        try:
-            edges = spark.read.parquet(cache_dir).select("u", "v").cache()
-        except Exception:  # noqa: BLE001 - unreadable cache → rebuild
-            edges = None
-    if edges is None:
+    not fact-table size. The oracle keeps the self-join formulation —
+    same relation, independent derivation.
+
+    CACHED per (application, sf_dir): four graph queries (triangles,
+    pagerank, degree_dist, bfs) each need the same ~1.2M-edge relation,
+    and building it costs ~4 s at sf0.1, so a suite would pay ~16 s
+    without the memo. Family-scoped: it lives while consecutive graph
+    queries share it and is released by the registry janitor on the
+    first non-graph build (the r6 aged-suite tail traced to
+    session-lifetime cached blocks)."""
+
+    def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
         )
-        edges = (
+        return (
             li.groupBy("l_orderkey")
             .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
             .select(
@@ -103,65 +70,29 @@ def _part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .cache()
         )
-        if cache_dir is not None:
-            try:
-                tmp = f"{cache_dir}.tmp.{os.getpid()}"
-                edges.coalesce(4).write.mode("overwrite").parquet(tmp)
-                os.rename(tmp, cache_dir)
-                _prune_artifacts(
-                    os.path.dirname(cache_dir), "edges",
-                    _ARTIFACT_KEEP_PER_KIND,
-                )
-            except Exception:  # noqa: BLE001 - cache write is best-effort
-                import shutil as _sh
 
-                _sh.rmtree(f"{cache_dir}.tmp.{os.getpid()}",
-                           ignore_errors=True)
-    _EDGE_MEMO[key] = edges
-
-    def _release(key=key, edges=edges):
-        _EDGE_MEMO.pop(key, None)
-        edges.unpersist()
-
-    # family-scoped: lives while consecutive graph queries share it, is
-    # released by the registry janitor on the first non-graph build (the
-    # r6 aged-suite tail traced to session-lifetime cached blocks).
-    track_cache(_release, scope="graphs")
-    return edges
-
-
-_DEG_MEMO: dict[tuple[str, str], DataFrame] = {}
+    return app_memo(spark, ("part_edges", sf_dir), build, scope="graphs")
 
 
 def _degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, degree) over the bidirectional co-occurrence adjacency —
     the probe-selection relation that six graph rungs each recomputed
     with their own graph-sized shuffle (r12 audit: ~1-1.5 s apiece at
-    sf0.1). Same family-cache discipline as _EDGE_MEMO: built once per
+    sf0.1). Same family-scoped memo as _part_edges: built once per
     (application, sf_dir), vocabulary-sized (one row per part), and
     janitor-released with the graph family."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _DEG_MEMO if k[0] != app]:
-        del _DEG_MEMO[k]
-    key = (app, sf_dir)
-    if key in _DEG_MEMO:
-        return _DEG_MEMO[key]
-    half = _part_edges(spark, sf_dir)
-    deg = (
-        half.select(F.col("u").alias("node"))
-        .unionAll(half.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-        .cache()
-    )
-    _DEG_MEMO[key] = deg
 
-    def _release(key=key, deg=deg):
-        _DEG_MEMO.pop(key, None)
-        deg.unpersist()
+    def build() -> DataFrame:
+        half = _part_edges(spark, sf_dir)
+        return (
+            half.select(F.col("u").alias("node"))
+            .unionAll(half.select(F.col("v").alias("node")))
+            .groupBy("node")
+            .agg(F.count("*").alias("degree"))
+            .cache()
+        )
 
-    track_cache(_release, scope="graphs")
-    return deg
+    return app_memo(spark, ("degrees", sf_dir), build, scope="graphs")
 
 
 _EDGES_SQL = """
@@ -1034,38 +965,26 @@ def q_graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (app_id, sf_dir) -> the converged LPA label relation, shared by
-# q_graph_lpa_communities and q_graph_modularity (same _EDGE_MEMO
-# discipline). LAZY caches only — lpa_communities is in the
-# zero-jobs-at-build gate, so the memo must not run jobs; the first
-# driver materialization fills both caches and the second consumer
-# reads them warm.
-_LPA_LABEL_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _lpa_labels_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _LPA_LABEL_MEMO if k[0] != app]:
-        del _LPA_LABEL_MEMO[k]
-    key = (app, sf_dir)
-    if key in _LPA_LABEL_MEMO:
-        return _LPA_LABEL_MEMO[key]
-    half = _part_edges(spark, sf_dir).where(F.expr(_LPA_EDGE_PRED))
-    edges = (
-        half.union(half.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .coalesce(8)
-        .cache()
-    )
-    lab = _lpa_labels(edges, _LPA_ITERS).cache()
-    _LPA_LABEL_MEMO[key] = lab
+    """The converged LPA label relation, shared by
+    q_graph_lpa_communities and q_graph_modularity (family-scoped memo
+    per (application, sf_dir), like _part_edges). LAZY caches only —
+    lpa_communities is in the zero-jobs-at-build gate, so the memo must
+    not run jobs; the first driver materialization fills both caches
+    and the second consumer reads them warm."""
 
-    def _release(key=key, edges=edges, lab=lab):
-        _LPA_LABEL_MEMO.pop(key, None)
-        lab.unpersist()
-        edges.unpersist()
+    def build() -> tuple[DataFrame, DataFrame]:
+        half = _part_edges(spark, sf_dir).where(F.expr(_LPA_EDGE_PRED))
+        edges = (
+            half.union(
+                half.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            )
+            .coalesce(8)
+            .cache()
+        )
+        return _lpa_labels(edges, _LPA_ITERS).cache(), edges
 
-    track_cache(_release, scope="graphs")
-    return lab
+    return app_memo(spark, ("lpa_labels", sf_dir), build, scope="graphs")[0]
 
 
 def _lpa_labels(edges: DataFrame, iters: int) -> DataFrame:
@@ -2133,195 +2052,49 @@ _STRESS_BUCKETS = 64  # quotient-graph node panel (partkey % buckets)
 _STRESS_LEVELS = 6  # BFS unroll depth; measured max ecc 3 at every SF
 
 
-# (app_id, sf_dir) -> sparsified quotient half-edge frame shared by the
-# stress-centrality / eccentricity pair (same _EDGE_MEMO discipline).
-_QUOT_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _quotient_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sparsified quotient co-occurrence edges (u < v, hash-kept ~11%):
-    built via the _part_edges per-order set-combination form — distinct
-    (order, bucket) first (<= 4 buckets/order), then in-array pair
-    explosion — NOT a fact self-join (the join form shuffles lineitem
-    twice; the set form measured 3.6 s vs 8.9 s on the full part graph
-    and the quotient is strictly cheaper). Memoized per (application,
-    sf_dir), family-scoped janitor release."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _QUOT_MEMO if k[0] != app]:
-        del _QUOT_MEMO[k]
-    key = (app, sf_dir)
-    if key in _QUOT_MEMO:
-        return _QUOT_MEMO[key]
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("o"),
-        (F.col("l_partkey") % _STRESS_BUCKETS).alias("p"),
-    )
-    edges = (
-        li.groupBy("o")
-        .agg(F.array_sort(F.collect_set("p")).alias("ps"))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> "
-                    "transform(slice(ps, i + 2, size(ps)), "
-                    "y -> struct(x AS u, y AS v))))"
-                )
-            ).alias("e")
+    """Sparsified quotient co-occurrence edges (u < v, hash-kept ~11%)
+    shared by the stress-centrality / eccentricity pair: built via the
+    _part_edges per-order set-combination form — distinct (order,
+    bucket) first (<= 4 buckets/order), then in-array pair explosion —
+    NOT a fact self-join (the join form shuffles lineitem twice; the set
+    form measured 3.6 s vs 8.9 s on the full part graph and the quotient
+    is strictly cheaper). Memoized per (application, sf_dir),
+    family-scoped janitor release."""
+
+    def build() -> DataFrame:
+        li = load_table(spark, sf_dir, "lineitem").select(
+            F.col("l_orderkey").alias("o"),
+            (F.col("l_partkey") % _STRESS_BUCKETS).alias("p"),
         )
-        .select("e.u", "e.v")
-        .distinct()
-        .where((F.col("u") * 31 + F.col("v") * 17) % 9 == 3)
-        .cache()
-    )
-    _QUOT_MEMO[key] = edges
-
-    def _release(key=key, edges=edges):
-        _QUOT_MEMO.pop(key, None)
-        edges.unpersist()
-
-    track_cache(_release, scope="graphs")
-    return edges
-
-
-
-# (app_id, sf_dir) -> the BFS path-count table R(s, v, d, sig) over the
-# sparsified quotient graph — the docstrings' "reusable artifact":
-# stress reads (d, sig), eccentricity reads d; build it once.
-_BFS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-# Cross-JVM persisted copy of R (r9 verdict item 4): the in-process
-# memo amortizes the quotient-panel build across a SUITE, but a
-# fresh-JVM solo run (the bench flag-adjudication subprocess, a
-# one-query driver invocation) paid the full lineitem scan +
-# edge-contraction every time (~5.7 s of the stress/eccentricity solo
-# cost at sf0.1). R is a <= B^2-row integer table, so persist it the
-# way q_llm_ann_index_persist persists its index: parquet keyed by the
-# panel parameters AND the identity of the source file (path + size +
-# mtime — a regenerated lineitem.parquet misses and rebuilds), written
-# atomically (tmp + rename) so concurrent builders race benignly.
-# OPT-IN since r12 (ALSP_BFS_DISK_CACHE=1): the optimization-round
-# contract forbids persisted intermediates keyed on the test data from
-# surviving across bench/oracle runs, so the default recomputes per
-# JVM; the machinery remains for operational reuse outside graded runs.
-#
-# Placement + trust (r10 ADVICE medium): the r9/r10 location was a
-# FIXED world-shared /tmp path — on a multi-user host any local user
-# could pre-create the predictable digest-named artifact (every digest
-# input is knowable) and silently poison graph results, and the dirs
-# grew unboundedly across fixture regenerations. The cache now lives
-# under a USER-OWNED 0700 root (~/.cache/alsp_graph_artifacts, override
-# ALSP_ARTIFACT_CACHE), ownership+mode are verified on EVERY access
-# (uid match, no group/other write — a pre-existing foreign or loose
-# dir disables the cache entirely rather than being trusted), each
-# entry's ownership is re-verified before read, and successful writes
-# opportunistically prune the oldest same-kind entries beyond a small
-# keep budget so regenerated fixtures can't accumulate stale digests.
-#
-# Versioning (r10 ADVICE low): each artifact kind carries its OWN
-# version constant — the BFS table and the part-edges relation are
-# built by independent code paths, so a change to either build must
-# invalidate only its own artifacts. Bump _BFS_CACHE_VERSION when the
-# sparsifier/BFS shape changes; _EDGES_CACHE_VERSION when the
-# co-occurrence edge build changes.
-_BFS_CACHE_VERSION = "bfs-v1-mod9eq3"
-_EDGES_CACHE_VERSION = "edges-v1-cooccur"
-_ARTIFACT_KEEP_PER_KIND = 8
-
-
-def _artifact_cache_root() -> str | None:
-    """User-owned 0700 artifact-cache root, or None (cache disabled)."""
-    base = os.environ.get("ALSP_ARTIFACT_CACHE")
-    if not base:
-        home = os.path.expanduser("~")
-        if not home or home == "~":
-            return None
-        base = os.path.join(home, ".cache", "alsp_graph_artifacts")
-    try:
-        os.makedirs(base, mode=0o700, exist_ok=True)
-        st = os.stat(base)
-        if st.st_uid != os.getuid() or (st.st_mode & 0o022):
-            return None  # foreign or group/other-writable dir: never trust
-    except OSError:
-        return None
-    return base
-
-
-def _owned_by_us(path: str) -> bool:
-    try:
-        return os.stat(path).st_uid == os.getuid()
-    except OSError:
-        return False
-
-
-def _prune_artifacts(root: str, kind: str, keep: int) -> None:
-    """Best-effort: drop the oldest `kind_*` entries beyond `keep`."""
-    import shutil
-
-    try:
-        entries = [
-            os.path.join(root, e)
-            for e in os.listdir(root)
-            if e.startswith(f"{kind}_") and ".tmp." not in e
-        ]
-        entries.sort(key=lambda p: os.path.getmtime(p), reverse=True)
-        for stale in entries[keep:]:
-            if os.path.isdir(stale):
-                shutil.rmtree(stale, ignore_errors=True)
-            else:
-                os.unlink(stale)
-    except OSError:
-        pass
-
-
-def _source_identity(sf_dir: str) -> list[tuple] | None:
-    """(name, size, mtime) stats of lineitem.parquet, or None if absent."""
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    try:
-        if os.path.isdir(src):
-            return sorted(
-                (f, os.path.getsize(os.path.join(src, f)),
-                 int(os.path.getmtime(os.path.join(src, f))))
-                for f in os.listdir(src)
+        return (
+            li.groupBy("o")
+            .agg(F.array_sort(F.collect_set("p")).alias("ps"))
+            .select(
+                F.explode(
+                    F.expr(
+                        "flatten(transform(ps, (x, i) -> "
+                        "transform(slice(ps, i + 2, size(ps)), "
+                        "y -> struct(x AS u, y AS v))))"
+                    )
+                ).alias("e")
             )
-        return [(src, os.path.getsize(src), int(os.path.getmtime(src)))]
-    except OSError:
-        return None
+            .select("e.u", "e.v")
+            .distinct()
+            .where((F.col("u") * 31 + F.col("v") * 17) % 9 == 3)
+            .cache()
+        )
 
-
-def _artifact_cache_path(
-    kind: str, version: str, sf_dir: str, params: tuple, ext: str
-) -> str | None:
-    import hashlib
-
-    root = _artifact_cache_root()
-    if root is None:
-        return None
-    stats = _source_identity(sf_dir)
-    if stats is None:
-        return None
-    key = repr((version, os.path.abspath(sf_dir), params, stats))
-    digest = hashlib.sha256(key.encode()).hexdigest()[:24]
-    return os.path.join(root, f"{kind}_{digest}{ext}")
-
-
-def _bfs_cache_path(sf_dir: str) -> str | None:
-    return _artifact_cache_path(
-        "bfs", _BFS_CACHE_VERSION, sf_dir,
-        (_STRESS_BUCKETS, _STRESS_LEVELS), ".parquet",
-    )
-
-
-def _edges_cache_path(sf_dir: str) -> str | None:
-    return _artifact_cache_path(
-        "edges", _EDGES_CACHE_VERSION, sf_dir, (), ".pq",
-    )
+    return app_memo(spark, ("quotient_edges", sf_dir), build, scope="graphs")
 
 
 def _quotient_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS path-count table R(s, v, d, sig) over the sparsified quotient
-    graph, computed DRIVER-SIDE over a structurally bounded collect (r8
-    verdict item 6): the quotient panel has <= _STRESS_BUCKETS nodes BY
-    CONSTRUCTION (partkey % 64), so the half-edge relation is <=
+    graph — the docstrings' "reusable artifact": stress reads (d, sig),
+    eccentricity reads d; built once per (application, sf_dir),
+    family-scoped. Computed DRIVER-SIDE over a structurally bounded
+    collect (r8 verdict item 6): the quotient panel has <= _STRESS_BUCKETS
+    nodes BY CONSTRUCTION (partkey % 64), so the half-edge relation is <=
     B(B-1)/2 = 2016 rows at ANY corpus size — the same bounded-collect
     class as the IVF/PQ training samples. The r8 distributed form (6
     levels x broadcast-join + group + anti-join + eager localCheckpoint)
@@ -2329,39 +2102,17 @@ def _quotient_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python BFS is exact-identical (per-level sigma sums, first-visit
     distance, unseen-only expansion) and costs milliseconds. R itself is
     <= B^2 rows, emitted as a LocalTableScan the stress/eccentricity
-    readers re-read for free. An OPT-IN keyed parquet artifact
-    (ALSP_BFS_DISK_CACHE=1, see _bfs_cache_path) can spare a fresh JVM
-    the build cost, but the default recomputes from parquet — the r12
-    optimization contract forbids cross-run persisted intermediates.
-    Distributed BFS at data scale lives where
+    readers re-read for free. Distributed BFS at data scale lives where
     the data is unbounded: q_graph_bfs_3hop / harmonic_centrality."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _BFS_MEMO if k[0] != app]:
-        del _BFS_MEMO[k]
-    key = (app, sf_dir)
-    if key in _BFS_MEMO:
-        return _BFS_MEMO[key]
 
-    disk = os.environ.get("ALSP_BFS_DISK_CACHE", "0") == "1"
-    cache = _bfs_cache_path(sf_dir) if disk else None
-    out: list[tuple[int, int, int, int]] | None = None
-    if cache is not None and os.path.exists(cache) and _owned_by_us(cache):
-        try:
-            import pyarrow.parquet as pq
-
-            t = pq.read_table(cache)
-            cols = [t.column(c).to_pylist() for c in ("s", "v", "d", "sig")]
-            out = list(zip(*cols))
-        except Exception:  # noqa: BLE001 - unreadable cache → rebuild
-            out = None
-    if out is None:
+    def build() -> DataFrame:
         half = _quotient_edges(spark, sf_dir).collect()  # bounded: <= 2016
         adj: dict[int, list[int]] = {}
         for row in half:
             u, v = int(row.u), int(row.v)
             adj.setdefault(u, []).append(v)
             adj.setdefault(v, []).append(u)
-        out = []
+        out: list[tuple[int, int, int, int]] = []
         for s in sorted(adj):
             dist = {s: 0}
             out.append((s, s, 0, 1))
@@ -2377,33 +2128,11 @@ def _quotient_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
                     out.append((s, w, lvl, c))
                 if not frontier:
                     break
-        if cache is not None:
-            try:
-                import pyarrow as pa
-                import pyarrow.parquet as pq
+        return spark.createDataFrame(
+            out, "s bigint, v bigint, d int, sig bigint"
+        )
 
-                cols = list(zip(*out)) if out else ([], [], [], [])
-                t = pa.table({
-                    "s": pa.array(cols[0], pa.int64()),
-                    "v": pa.array(cols[1], pa.int64()),
-                    "d": pa.array(cols[2], pa.int32()),
-                    "sig": pa.array(cols[3], pa.int64()),
-                })
-                tmp = f"{cache}.tmp.{os.getpid()}"
-                pq.write_table(t, tmp)
-                os.replace(tmp, cache)
-                _prune_artifacts(
-                    os.path.dirname(cache), "bfs", _ARTIFACT_KEEP_PER_KIND
-                )
-            except Exception:  # noqa: BLE001 - cache write is best-effort
-                pass
-    r = spark.createDataFrame(
-        [tuple(int(x) for x in row) for row in out],
-        "s bigint, v bigint, d int, sig bigint",
-    )
-    _BFS_MEMO[key] = r
-    track_cache(lambda key=key: _BFS_MEMO.pop(key, None), scope="graphs")
-    return r
+    return app_memo(spark, ("quotient_bfs", sf_dir), build, scope="graphs")
 
 
 def _stress_oracle(k: int = _STRESS_LEVELS) -> str:

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aws_lambda_stream_processing_spark.registry import query
+from aws_lambda_stream_processing_spark.registry import app_memo, query
 from aws_lambda_stream_processing_spark.tables import load_table
 
 EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
@@ -765,38 +765,25 @@ _PARTSUPP_CTE = f"""
 WITH partsupp AS ({_PARTSUPP_SELECT})
 """
 
-# (app_id, sf_dir) -> cached derived-partsupp DataFrame. Four TPC-H rungs
-# (q2, q9, q11, q20) each rebuild the same corpus-wide (partkey, suppkey)
-# aggregation — and q2/q11/q20 reference it TWICE inside one query (the
-# decorrelated MIN / HAVING scalar / IN chain), which Spark's inlined
-# CTEs re-execute each time (guide §2.4: duplicated subtrees are repeat
-# shuffles). Memoize it per (application, sf_dir) with the same eviction
-# + janitor discipline as graphs._EDGE_MEMO: family-scoped, so the memo
-# lives while consecutive sqlfront rungs run and is released on the
-# first foreign build. The DuckDB oracle keeps the CTE formulation —
-# identical relation, independently derived.
-_PARTSUPP_MEMO: dict[tuple[str, str], "DataFrame"] = {}
-
-
+# The cached derived-partsupp DataFrame. Four TPC-H rungs (q2, q9, q11,
+# q20) each rebuild the same corpus-wide (partkey, suppkey) aggregation —
+# and q2/q11/q20 reference it TWICE inside one query (the decorrelated
+# MIN / HAVING scalar / IN chain), which Spark's inlined CTEs re-execute
+# each time (guide §2.4: duplicated subtrees are repeat shuffles).
+# Memoize it per (application, sf_dir) through registry.app_memo,
+# family-scoped: the memo lives while consecutive sqlfront rungs run and
+# is released on the first foreign build. The DuckDB oracle keeps the CTE
+# formulation — identical relation, independently derived.
 def _register_partsupp(spark: SparkSession, sf_dir: str) -> None:
-    from aws_lambda_stream_processing_spark.registry import track_cache
-
     _register(spark, sf_dir, "lineitem")
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _PARTSUPP_MEMO if k[0] != app]:
-        del _PARTSUPP_MEMO[k]
-    key = (app, sf_dir)
-    df = _PARTSUPP_MEMO.get(key)
-    if df is None:
-        df = spark.sql(_PARTSUPP_SELECT).cache()
-        _PARTSUPP_MEMO[key] = df
-
-        def _release(key=key, df=df):
-            _PARTSUPP_MEMO.pop(key, None)
-            df.unpersist()
-
-        track_cache(_release, scope="sqlfront")
+    df = app_memo(
+        spark,
+        ("partsupp", sf_dir),
+        lambda: spark.sql(_PARTSUPP_SELECT).cache(),
+        scope="sqlfront",
+    )
     df.createOrReplaceTempView("partsupp")
+
 
 _Q2_SQL = """
 SELECT s.s_acctbal, s.s_name, n.n_name, p.p_partkey, p.p_name,

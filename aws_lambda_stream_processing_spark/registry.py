@@ -16,8 +16,9 @@ cross-engine (r10 ADVICE; vacuity bounds in the rung docstring).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Hashable
 from dataclasses import dataclass, field
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -51,7 +52,7 @@ REGISTRY: dict[str, QuerySpec] = {}
 #                     survives while consecutive queries of the same family
 #                     run, released on the first foreign build. Registration
 #                     order groups families, so sharing is preserved exactly
-#                     where it pays.
+#                     where it pays. Only app_memo registers these.
 _CACHE_JANITOR: list[tuple[str, Callable[[], None]]] = []
 
 
@@ -60,9 +61,50 @@ def track_cache(release: Callable[[], None], scope: str = "") -> None:
     _CACHE_JANITOR.append((scope, release))
 
 
-def tracked_local_checkpoint(
-    df: DataFrame, eager: bool = True, scope: str = ""
-) -> DataFrame:
+# (applicationId, key) -> memoized value; see app_memo.
+_APP_MEMO: dict[tuple[str, Hashable], Any] = {}
+
+
+def app_memo(
+    spark: SparkSession,
+    key: Hashable,
+    build: Callable[[], Any],
+    scope: str | None = None,
+) -> Any:
+    """`build()`'s value, built once per (Spark application, `key`).
+
+    Keyed by the applicationId, NOT id(spark): CPython recycles object
+    ids, so a new session could otherwise be handed frames bound to a
+    dead one. An access from a new application evicts every other
+    application's entries (one live session at a time; their frames
+    died with their context).
+
+    scope=None keeps the entry for the application's life (the
+    tables.load_table frames). scope="<family>" makes it a cross-query
+    memo of that family (see _CACHE_JANITOR): the first build outside
+    the family pops the entry and unpersists the frames `build` cached.
+    `build` returns a DataFrame or a tuple of them; the release visits
+    a tuple in order."""
+    app = spark.sparkContext.applicationId
+    for k in [k for k in _APP_MEMO if k[0] != app]:
+        del _APP_MEMO[k]
+    full = (app, key)
+    if full in _APP_MEMO:
+        return _APP_MEMO[full]
+    value = _APP_MEMO[full] = build()
+    if scope is not None:
+
+        def release() -> None:
+            _APP_MEMO.pop(full, None)
+            for frame in value if isinstance(value, tuple) else (value,):
+                if getattr(frame, "is_cached", False):
+                    frame.unpersist()
+
+        track_cache(release, scope=scope)
+    return value
+
+
+def tracked_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """localCheckpoint with janitor-registered block release.
 
     A localCheckpoint pins its blocks in executor storage until the
@@ -84,7 +126,7 @@ def tracked_local_checkpoint(
     never do this."""
     out = df.localCheckpoint(eager=eager)
     jrdd = out._jdf.queryExecution().analyzed().rdd()
-    track_cache(lambda: jrdd.unpersist(False), scope=scope)
+    track_cache(lambda: jrdd.unpersist(False))
     return out
 
 

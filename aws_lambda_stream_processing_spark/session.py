@@ -99,12 +99,11 @@ def get_spark(app_name: str = "alsp-spark-engine") -> SparkSession:
         .config("spark.cleaner.periodicGC.interval", "60s")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # User-owned warehouse, not a world-shared /tmp path (same
-        # hazard class as the r10 ADVICE on the graph artifact caches:
-        # under /tmp another local user can pre-own the fixed path and
-        # break or shadow managed-table writes; the CTAS rung's
-        # drop-and-clean already prevents silent READ poisoning, so the
-        # residual risk was write failure, but the fix is one line).
+        # User-owned warehouse, not a world-shared /tmp path: under /tmp
+        # another local user can pre-own the fixed path and break or
+        # shadow managed-table writes (the CTAS rung's drop-and-clean
+        # already prevents silent READ poisoning, so the residual risk
+        # was write failure, but the fix is one line).
         .config(
             "spark.sql.warehouse.dir",
             os.path.join(

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from aws_lambda_stream_processing_spark.registry import app_memo
+
 TABLES = [
     "region",
     "nation",
@@ -27,31 +29,26 @@ TABLES = [
 BROADCAST_TABLES = {"region", "nation", "supplier"}
 
 
-# Session-scoped memo: re-creating a parquet DataFrame re-lists files and
-# re-reads footers (~30-50 ms) on every one of a suite's table loads; the
-# same DataFrame object is semantically identical. Keyed by the Spark
-# applicationId — NOT id(spark): CPython recycles object ids, so a new
-# session could otherwise be handed frames bound to a dead one. Entries
-# from other applications are evicted on access (one live session at a
-# time), which also frees any .cache()d frames. With ALSP_CACHE_TABLES=1
-# the frame is additionally .cache()d — the SURVEY §6 bench posture
-# (bench.py sets it; correctness/tests run uncached so plan gates keep
-# seeing real parquet scans with pushdown).
-_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
+# Application-scoped memo (registry.app_memo, no family scope: kept for
+# the application's life): re-creating a parquet DataFrame re-lists files
+# and re-reads footers (~30-50 ms) on every one of a suite's table loads;
+# the same DataFrame object is semantically identical. With
+# ALSP_CACHE_TABLES=1 the frame is additionally .cache()d — the SURVEY §6
+# bench posture (bench.py sets it; correctness/tests run uncached so plan
+# gates keep seeing real parquet scans with pushdown).
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    return app_memo(
+        spark,
+        ("table", sf_dir, name),
+        lambda: _read_table(spark, sf_dir, name),
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     import os
 
-    app_id = spark.sparkContext.applicationId
-    stale = [k for k in _MEMO if k[0] != app_id]
-    for k in stale:
-        del _MEMO[k]
-    key = (app_id, sf_dir, name)
-    if key in _MEMO:
-        return _MEMO[key]
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         # ts is parquet TIMESTAMP(NANOS) read as raw nanos (nanosAsLong);
@@ -107,7 +104,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             if w > 1:
                 df = df.repartition(w)
         df = df.cache()
-    _MEMO[key] = df
     return df
 
 

@@ -319,98 +319,6 @@ def test_bench_machine_factor_controls_are_pure_shapes():
     assert mf_none is None
 
 
-# ---------------------------------------------------------------------------
-# Graph artifact cache trust gates (r10 ADVICE medium)
-
-
-def test_artifact_cache_rejects_untrusted_root(tmp_path, monkeypatch):
-    from aws_lambda_stream_processing_spark.operators import graphs
-
-    loose = tmp_path / "loose"
-    loose.mkdir(mode=0o700)
-    os.chmod(loose, 0o777)  # group/other-writable → must be refused
-    monkeypatch.setenv("ALSP_ARTIFACT_CACHE", str(loose))
-    assert graphs._artifact_cache_root() is None
-
-    owned = tmp_path / "owned"
-    monkeypatch.setenv("ALSP_ARTIFACT_CACHE", str(owned))
-    root = graphs._artifact_cache_root()
-    assert root == str(owned)
-    assert (os.stat(root).st_mode & 0o777) == 0o700
-
-
-def test_artifact_cache_versions_are_independent(tmp_path, monkeypatch):
-    """BFS and part-edges artifacts must key on their OWN version
-    constants: bumping one must move only its own paths."""
-    import shutil
-
-    from aws_lambda_stream_processing_spark.operators import graphs
-
-    monkeypatch.setenv("ALSP_ARTIFACT_CACHE", str(tmp_path / "c"))
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    shutil.copy(
-        "/root/testdata/sf0.001/lineitem.parquet", sf / "lineitem.parquet"
-    )
-    b1, e1 = graphs._bfs_cache_path(str(sf)), graphs._edges_cache_path(str(sf))
-    assert b1 and e1 and b1 != e1
-    monkeypatch.setattr(graphs, "_BFS_CACHE_VERSION", "bfs-v2-test")
-    b2, e2 = graphs._bfs_cache_path(str(sf)), graphs._edges_cache_path(str(sf))
-    assert b2 != b1, "BFS version bump must move the BFS artifact"
-    assert e2 == e1, "BFS version bump must NOT move the edges artifact"
-    monkeypatch.setattr(graphs, "_EDGES_CACHE_VERSION", "edges-v2-test")
-    b3, e3 = graphs._bfs_cache_path(str(sf)), graphs._edges_cache_path(str(sf))
-    assert b3 == b2 and e3 != e1
-
-
-def test_artifact_cache_prunes_stale_digests(tmp_path, monkeypatch):
-    from aws_lambda_stream_processing_spark.operators import graphs
-
-    root = tmp_path / "c"
-    root.mkdir(mode=0o700)
-    for i in range(12):
-        p = root / f"bfs_{i:024d}.parquet"
-        p.write_bytes(b"x")
-        os.utime(p, (1000 + i, 1000 + i))
-    (root / "edges_keepme.pq").mkdir()
-    graphs._prune_artifacts(str(root), "bfs", keep=8)
-    left = sorted(e for e in os.listdir(root) if e.startswith("bfs_"))
-    assert len(left) == 8
-    # newest 8 kept (highest mtimes = indices 4..11)
-    assert left[0] == "bfs_000000000000000000000004.parquet"
-    assert (root / "edges_keepme.pq").is_dir(), "foreign kind untouched"
-
-
-def test_artifact_disk_cache_is_opt_in(monkeypatch):
-    """r12 optimization contract: every bench/oracle invocation computes
-    from the parquet inputs — no intermediate persisted by a PREVIOUS
-    run may be served by default. The cross-JVM graph artifact cache
-    must therefore be gated on an explicit ALSP_BFS_DISK_CACHE=1; with
-    the env unset, both gate sites must evaluate to disabled."""
-    import ast
-    import inspect
-
-    from aws_lambda_stream_processing_spark.operators import graphs
-
-    monkeypatch.delenv("ALSP_BFS_DISK_CACHE", raising=False)
-    src = inspect.getsource(graphs)
-    gates = [
-        node
-        for node in ast.walk(ast.parse(src))
-        if isinstance(node, ast.Call)
-        and isinstance(node.func, ast.Attribute)
-        and node.func.attr == "get"
-        and node.args
-        and isinstance(node.args[0], ast.Constant)
-        and node.args[0].value == "ALSP_BFS_DISK_CACHE"
-    ]
-    assert len(gates) >= 2, "expected the edges + bfs gate sites"
-    for g in gates:
-        assert len(g.args) == 2 and g.args[1].value == "0", (
-            "disk cache must default OFF (opt-in via ALSP_BFS_DISK_CACHE=1)"
-        )
-
-
 def test_side_effects_have_one_owner():
     """Each side effect a query leaves behind has one implementation:
     scratch dirs (session.scratch / scratch_dir / session_dir), bounded
@@ -477,6 +385,58 @@ def test_side_effects_have_one_owner():
             owner = getattr(top, "name", "<module>")
             for node in ast.walk(top):
                 k = isinstance(node, ast.Call) and kind(node)
+                if not k:
+                    continue
+                if (rel, owner, k) in exempt:
+                    found.add((rel, owner, k))
+                else:
+                    offences.append(f"{rel}:{node.lineno} {owner}: {k}")
+    assert not offences, offences
+    assert found == exempt, f"exempt sites not found: {exempt - found}"
+
+
+def test_per_application_state_has_one_owner():
+    """Per-application memos have one implementation: registry.app_memo
+    owns the applicationId key, the eviction of other applications'
+    entries and the family-scoped janitor release. Outside registry.py
+    no package module may read .applicationId or call track_cache with
+    a scope — a hand-rolled copy is how a memo outlives its family or
+    serves a dead application's frames. Exemption: session.session_dir,
+    whose per-application root is a directory reaped at interpreter
+    exit, not a memo. The exemption must still be FOUND, so the matcher
+    is proven live."""
+    import ast
+    import pathlib
+
+    import aws_lambda_stream_processing_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    exempt = {("session.py", "session_dir", "applicationId")}
+
+    def kind(node: ast.AST) -> str | None:
+        if isinstance(node, ast.Attribute) and node.attr == "applicationId":
+            return "applicationId"
+        if not isinstance(node, ast.Call):
+            return None
+        f = node.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        scoped = len(node.args) > 1 or any(
+            k.arg == "scope" for k in node.keywords
+        )
+        if name == "track_cache" and scoped:
+            return "track_cache(scope)"
+        return None
+
+    found: set[tuple[str, str, str]] = set()
+    offences: list[str] = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "registry.py":
+            continue
+        for top in ast.parse(path.read_text()).body:
+            owner = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                k = kind(node)
                 if not k:
                     continue
                 if (rel, owner, k) in exempt:

@@ -720,34 +720,3 @@ def test_dprefix_consistent_over_cached_large_relation(spark):
         assert (out.n_total == 15000).all()
     finally:
         base.unpersist()
-
-
-def test_graph_disk_cache_key_tracks_source_identity(tmp_path):
-    """The keyed graph artifacts (_quotient_bfs R table, _part_edges
-    relation) are only safe to reuse across JVMs because their cache
-    key includes the SOURCE FILE identity — a regenerated
-    lineitem.parquet must miss and rebuild, never serve stale panels."""
-    import os
-    import shutil
-
-    from aws_lambda_stream_processing_spark.operators.graphs import (
-        _bfs_cache_path,
-    )
-
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    shutil.copy(
-        "/root/testdata/sf0.001/lineitem.parquet", sf / "lineitem.parquet"
-    )
-    p1 = _bfs_cache_path(str(sf))
-    assert p1 is not None
-    # same content, same mtime -> same key
-    assert _bfs_cache_path(str(sf)) == p1
-    # touched (regenerated) source -> different key
-    st = os.stat(sf / "lineitem.parquet")
-    os.utime(sf / "lineitem.parquet", (st.st_atime, st.st_mtime + 7))
-    p2 = _bfs_cache_path(str(sf))
-    assert p2 != p1
-    # missing source -> no cache path (builder falls through to compute)
-    os.remove(sf / "lineitem.parquet")
-    assert _bfs_cache_path(str(sf)) is None

@@ -96,12 +96,11 @@ def test_partsupp_memo_is_shared_across_tpch_consumers(spark, registry):
     partsupp from the family memo (InMemoryTableScan in the q9 plan;
     one memo entry), so the corpus-wide (partkey, suppkey) agg builds
     once per family run instead of 6 times across q2/q9/q11/q20."""
-    from aws_lambda_stream_processing_spark.operators.sqlfront import (
-        _PARTSUPP_MEMO,
-    )
+    from aws_lambda_stream_processing_spark.registry import _APP_MEMO
 
     df11 = registry["q_sql_tpch_q11"].fn(spark, SF_DIR)
-    assert any(k[1] == SF_DIR for k in _PARTSUPP_MEMO)
+    partsupp_memo = [k for _, k in _APP_MEMO if k[0] == "partsupp"]
+    assert any(k[1] == SF_DIR for k in partsupp_memo)
     plan11 = plan_string(df11)
     assert "InMemoryTableScan" in plan11, plan11[:1500]
     df9 = registry["q_sql_tpch_q9"].fn(spark, SF_DIR)
@@ -164,9 +163,11 @@ def test_cached_tables_are_width_spread(spark, monkeypatch):
         monkeypatch.setattr(T, "_SPREAD_FLOOR", 1)
         assert T._spread_width(spark, customer) == 1
     finally:
+        from aws_lambda_stream_processing_spark.registry import _APP_MEMO
+
         app = spark.sparkContext.applicationId
         for name in ("events", "nation"):
-            frame = T._MEMO.pop((app, sf_dir, name), None)
+            frame = _APP_MEMO.pop((app, ("table", sf_dir, name)), None)
             if frame is not None:
                 frame.unpersist()
 

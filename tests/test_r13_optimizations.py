@@ -66,3 +66,13 @@ def test_dprefix_width_is_size_derived(spark):
         assert D.derived_parts(small, None) == cap
     finally:
         D._PART_TARGET_BYTES = saved
+
+
+def test_dprefix_width_ignores_missing_stats(spark):
+    """derived_parts: an input without stats estimates at
+    spark.sql.defaultSizeInBytes (Long.MaxValue); that must read as
+    "unknown" and get DEFAULT_PARTS, not the 4x-parallelism cap."""
+    from aws_lambda_stream_processing_spark.operators import dprefix as D
+
+    df = spark.createDataFrame([(i,) for i in range(100)], "k long")
+    assert D.derived_parts(df, None) == D.DEFAULT_PARTS

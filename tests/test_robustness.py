@@ -326,16 +326,17 @@ def test_cache_janitor_releases_persisted_blocks(spark, registry):
     assert n_persistent() >= 1  # the memoized edge relation is pinned
     registry["q_graph_pagerank"].fn(spark, SF_DIR).collect()
     # pagerank must REUSE the memo, not rebuild it (janitor kept it)
-    from aws_lambda_stream_processing_spark.operators.graphs import (
-        _EDGE_MEMO,
-    )
+    from aws_lambda_stream_processing_spark.registry import _APP_MEMO
 
-    assert any(k[1] == SF_DIR for k in _EDGE_MEMO)
+    def edge_memo() -> list:
+        return [k for _, k in _APP_MEMO if k[0] == "part_edges"]
+
+    assert any(k[1] == SF_DIR for k in edge_memo())
 
     # first foreign build sweeps everything: memo + query-local caches
     registry["q_filter_cmp"].fn(spark, SF_DIR).collect()
     assert n_persistent() == 0
-    assert not _EDGE_MEMO
+    assert not edge_memo()
 
     # dedup's intra-query caches are freed by the next build too
     registry["q_llm_minhash_lsh"].fn(spark, SF_DIR).collect()
